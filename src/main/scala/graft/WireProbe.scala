@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *     in-flight frames per connection, the reference's
   *     concurrent-streams-per-pipeline model) — isolating protocol shape
   *     from engine cost;
-  *  3. the full engine byte-leg path (repartition + processSlice + pool)
+  *  3. the full engine byte-leg path (processSlice + pool)
   *     at 1 KiB, the exact BENCH shape, for both dispatcher forms.
   *
   * Prints one JSON line; run with SPARK_GRAFT_SF_DIR set. Findings are

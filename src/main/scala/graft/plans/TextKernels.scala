@@ -172,131 +172,6 @@ object TextKernels {
     v >>> 4
   }
 
-  private def md5Prefix60Of(bytes: Array[Byte], off: Int, len: Int): Long = {
-    val md = md5Local.get()
-    md.update(bytes, off, len)
-    val d = md.digest()
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
-
-  /** The 60-bit md5-prefix SimHash of a text's whitespace tokens — fuses
-    * tokenize, per-token digest and the per-bit majority vote:
-    * == aggregate(sequence(0, 59), 0L, (acc, i) -> acc + if(
-    *      aggregate(transform(ws_tokens(s), t -> md5_prefix60(t)), 0L,
-    *        (v, h) -> v + if(((h >> i) & 1) = 1, 1, -1)) > 0,
-    *      shiftleft(1L, i), 0L))
-    * (zero tokens => 0, like the composable form). The composable chain is
-    * 60 interpreted lambda dispatches PER TOKEN; here each token is one
-    * digest + 60 flat adds. */
-  def wsSimhash60(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    val votes = new Array[Int](60)
-    var i = 0
-    var start = -1
-    def feed(off: Int, len: Int): Unit = {
-      val h = md5Prefix60Of(bytes, off, len)
-      var b = 0
-      while (b < 60) { votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1); b += 1 }
-    }
-    while (i < n) {
-      if (isWs(bytes(i))) {
-        if (start >= 0) { feed(start, i - start); start = -1 }
-      } else if (start < 0) start = i
-      i += 1
-    }
-    if (start >= 0) feed(start, n - start)
-    var sig = 0L
-    var b = 0
-    while (b < 60) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
-
-  /** One UTF-8 codepoint walk: byte offsets of each character boundary
-    * (offs(i) = first byte of char i; offs(nChars) = byte length). */
-  private def charOffsets(bytes: Array[Byte]): Array[Int] = {
-    // first pass: count chars; second: record boundaries
-    var i = 0
-    var n = 0
-    while (i < bytes.length) { i += UTF8String.numBytesForFirstByte(bytes(i)); n += 1 }
-    val offs = new Array[Int](n + 1)
-    i = 0; var c = 0
-    while (i < bytes.length) {
-      offs(c) = i
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-      c += 1
-    }
-    offs(n) = bytes.length
-    offs
-  }
-
-  /** q118's space-wrapped symbol representation — every CHARACTER wrapped
-    * in its own spaces (" a  b  c "):
-    * == concat_ws('', transform(sequence(1, length(s)),
-    *      i -> concat(' ', substring(s, i, 1), ' ')))
-    * for non-empty input (the only inputs the trainer feeds it: ws tokens
-    * are never empty). On EMPTY input the kernel returns '' — matching the
-    * SQL oracle's range(1, length+1) semantics, where Spark's composable
-    * sequence(1, 0) would step backwards and fabricate '    '. */
-  def wrapSymbols(s: UTF8String): UTF8String = {
-    val bytes = s.getBytes
-    val offs = charOffsets(bytes)
-    val nChars = offs.length - 1
-    val out = new Array[Byte](bytes.length + 2 * nChars)
-    var c = 0
-    var pos = 0
-    while (c < nChars) {
-      out(pos) = ' '; pos += 1
-      val l = offs(c + 1) - offs(c)
-      System.arraycopy(bytes, offs(c), out, pos, l); pos += l
-      out(pos) = ' '; pos += 1
-      c += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  /** Adjacent symbol pairs of a space-wrapped representation — the BPE
-    * pair-count projection:
-    * == transform(sequence(1, size(split(trim(w), '  ')) - 1),
-    *      i -> struct(element_at(s, i) AS l, element_at(s, i + 1) AS r))
-    *    over s = split(trim(w), '  ')
-    * (empty array when the word has fewer than two symbols). Symbols are
-    * wrapped characters/merges and never contain 0x20, so splitting on the
-    * exact two-space separator after trimming 0x20 runs is exact. */
-  def wsSymPairs(w: UTF8String): ArrayData = {
-    val bytes = w.getBytes
-    var lo = 0
-    var hi = bytes.length
-    while (lo < hi && bytes(lo) == ' ') lo += 1
-    while (hi > lo && bytes(hi - 1) == ' ') hi -= 1
-    if (lo >= hi) return new GenericArrayData(Array.empty[Any])
-    // split [lo, hi) on "  " (two spaces)
-    val syms = new java.util.ArrayList[UTF8String]()
-    var start = lo
-    var i = lo
-    while (i < hi - 1) {
-      if (bytes(i) == ' ' && bytes(i + 1) == ' ') {
-        syms.add(UTF8String.fromBytes(bytes, start, i - start))
-        i += 2
-        start = i
-      } else i += 1
-    }
-    syms.add(UTF8String.fromBytes(bytes, start, hi - start))
-    val m = syms.size()
-    if (m < 2) return new GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](m - 1)
-    i = 0
-    while (i < m - 1) {
-      out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](syms.get(i), syms.get(i + 1)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   // ---- expressions -------------------------------------------------
 
   case class WsTokens(child: Expression) extends UnaryExpression {

@@ -4,6 +4,7 @@ import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.util.AccumulatorV2
 
 /**
  * The forwarding data path: Kafka-shaped records in → per-message dispatch
@@ -26,11 +27,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *  - produce: one Kafka batch write with the per-row `topic` column
  *    (Kafka sink routes natively); tests plug an in-memory topic store.
  *
- * At scale: records of one topic-partition arrive in one source partition
- * (Kafka source guarantee), so the ack queue per (topic,partition) slice is
- * executor-local state — no shuffle in the hot path at all; the only
- * cross-task data movement is the produced retry/DLQ records, written
- * directly from the same task.
+ * At scale: each trigger is one Spark job with one stage — source scan →
+ * `processSlice` → the queue store's write. The Kafka and graft-queue
+ * sources plan one offset-ordered slice per topic-partition, so the ack
+ * queue per (topic,partition) is executor-local state and there is no
+ * shuffle in the hot path. Commit watermarks ride back on the write job's
+ * task results ([[WatermarkAccumulator]]), not on a second job.
  */
 object ForwardingEngine {
 
@@ -156,14 +158,16 @@ object ForwardingEngine {
    *
    * Runs on executors. Records in a slice belong to contiguous offsets of
    * few (topic,partition)s; an AckTrackingQueue per (topic,partition)
-   * computes the commit watermark exactly as the reference does.
+   * computes the commit watermark exactly as the reference does. Once every
+   * record is terminal, each outcome's watermark goes into `watermarks`.
    */
   def processSlice(
       spec: JobSpec,
       dispatcherFactory: DispatcherFactory,
       localCluster: String,
       ackCapacity: Int = 10000,
-      holDetector: HeadBlockingDetector = HeadBlockingDetector())(
+      holDetector: HeadBlockingDetector = HeadBlockingDetector(),
+      watermarks: Option[WatermarkAccumulator] = None)(
       records: Iterator[KafkaRecord]): Iterator[Outcome] = {
     import java.util.concurrent.{CompletableFuture, Executors, TimeUnit}
 
@@ -314,23 +318,29 @@ object ForwardingEngine {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"[graft] ${spec.jobGroupId}: median dispatch latency " +
           s"${latency.stats.medianNanos / 1000000} ms exceeds rpc timeout ${spec.rpc.rpcTimeoutMs} ms")
-    results.iterator.filter(_ != null)
+    val out = results.filter(_ != null)
+    watermarks.foreach(acc => out.foreach(o =>
+      acc.add((o.physicalTopic, o.physicalPartition) -> o.commitWatermark)))
+    out.iterator
   }
 
-  /** Batch-process a Dataset of records (the foreachBatch body). */
+  /** Batch-process a Dataset of records (the foreachBatch body), in the
+    * source's own partitions. The Kafka and graft-queue sources give each
+    * topic-partition one offset-ordered slice; other inputs may split a
+    * topic-partition across tasks, which is still correct because the
+    * watermarks are committed only after the whole batch is terminal. The
+    * task-local sort (no exchange) feeds each ack queue in offset order. */
   def processBatch(
       spec: JobSpec,
       dispatcherFactory: DispatcherFactory,
       localCluster: String,
-      records: Dataset[KafkaRecord]): Dataset[Outcome] = {
+      records: Dataset[KafkaRecord],
+      watermarks: Option[WatermarkAccumulator] = None): Dataset[Outcome] = {
     import records.sparkSession.implicits._
-    // co-locate each topic-partition in one task so ack tracking is local;
-    // the Kafka source already delivers this layout — the repartition is a
-    // no-op there and only matters for arbitrary test sources.
     records
-      .repartition(col("topic"), col("partition"))
       .sortWithinPartitions("topic", "partition", "offset")
-      .mapPartitions(processSlice(spec, dispatcherFactory, localCluster))
+      .mapPartitions(processSlice(spec, dispatcherFactory, localCluster,
+        watermarks = watermarks))
   }
 
   /**
@@ -396,34 +406,24 @@ object ForwardingEngine {
     // default trigger: continuous micro-batches — a long-running forwarding
     // job keeps consuming as data arrives (AvailableNow would snapshot the
     // offsets at start and self-terminate, which only fits drain jobs)
+    val watermarks = committer.map { _ =>
+      val acc = new WatermarkAccumulator
+      stream.sparkSession.sparkContext.register(acc, "graft.commitWatermarks")
+      acc
+    }
     stream.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[KafkaRecord], batchId: Long) =>
-        if (committer.isEmpty) {
-          store.produce(processBatch(spec, dispatcherFactory, localCluster, batch))
-        } else {
-          // two actions over the outcomes (queue produce + watermark pull):
-          // persist so the dispatch pass — which talks to the consumer
-          // service — normally runs once per batch. Cache eviction or
-          // partition loss can recompute it, re-dispatching that slice:
-          // at-least-once, the same contract the dispatch path already
-          // accepts (task retries duplicate too)
-          val outcomes = processBatch(spec, dispatcherFactory, localCluster, batch).persist()
-          try {
-            store.produce(outcomes)
-            // commit the ACK watermark per (topic,partition) — the
-            // reference's semantic (commit the acked prefix, not the fetch
-            // position) — through the cadence/keepalive policy
-            val wms = outcomes.filter(col("commitWatermark") >= 0L)
-              .groupBy(col("physicalTopic"), col("physicalPartition"))
-              .agg(max(col("commitWatermark")).as("wm"))
-              .collect()
-              .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-            committer.foreach { c => c.offer(wms); c.tick() }
-          } finally { outcomes.unpersist(); () }
-        }
+        // the store's one action is the batch's only job: it dispatches and
+        // harvests the watermarks. Commit the ACK watermark per
+        // (topic,partition) — the reference's semantic (commit the acked
+        // prefix, not the fetch position) — only once that job succeeded
+        try {
+          store.produce(processBatch(spec, dispatcherFactory, localCluster, batch, watermarks))
+          for (c <- committer; acc <- watermarks) { c.offer(acc.value); c.tick() }
+        } finally watermarks.foreach(_.reset())
         ()
       }
       .start()
@@ -455,5 +455,35 @@ trait DispatcherFactory extends Serializable {
 /** Where routed (retry/DLQ/resq) records go. In production this is the Kafka
   * batch write with the per-row `topic` column; tests use an in-memory map. */
 trait QueueStore extends Serializable {
+  /** Run exactly ONE action over every partition of `outcomes`. Evaluating
+    * `outcomes` is what dispatches the batch and harvests its commit
+    * watermarks, so that action is the trigger's whole data path; a second
+    * action would dispatch every message again, and skipping a partition
+    * would leave its messages undispatched. */
   def produce(outcomes: Dataset[ForwardingEngine.Outcome]): Unit
+}
+
+/** Max commit watermark per (topic, partition), collected from the tasks of
+  * the job that evaluates a batch's outcomes. Max-merge is idempotent, so a
+  * retried or speculative task adding the same watermark again changes
+  * nothing. Synchronized: tasks merge on the scheduler thread while the
+  * foreachBatch thread reads and resets. */
+final class WatermarkAccumulator
+    extends AccumulatorV2[((String, Int), Long), Map[(String, Int), Long]] {
+  private val wms = scala.collection.mutable.Map.empty[(String, Int), Long]
+  override def isZero: Boolean = synchronized(wms.isEmpty)
+  override def copy(): WatermarkAccumulator = synchronized {
+    val c = new WatermarkAccumulator
+    c.wms ++= wms
+    c
+  }
+  override def reset(): Unit = synchronized(wms.clear())
+  /** Watermarks below 0 mean "unknown" and are ignored. */
+  override def add(v: ((String, Int), Long)): Unit = synchronized {
+    val (tp, wm) = v
+    if (wm >= 0 && wm > wms.getOrElse(tp, -1L)) wms(tp) = wm
+  }
+  override def merge(other: AccumulatorV2[((String, Int), Long), Map[(String, Int), Long]]): Unit =
+    other.value.foreach(add)
+  override def value: Map[(String, Int), Long] = synchronized(wms.toMap)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{CommitTarget, OffsetCommitter}
+import graft.streaming.{CommitTarget, OffsetCommitter, WatermarkAccumulator}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
@@ -85,5 +85,27 @@ class OffsetCommitterSpec extends AnyFunSuite {
     c.offer(Map(tp -> 8L))
     rec.now = 1L
     assert(c.tick() == Map(tp -> 8L), "only the advanced partition commits")
+  }
+
+  test("watermark accumulator: max-merge, idempotent re-add, reset") {
+    val (a0, a1, b0) = (("t", 0), ("t", 1), ("u", 0))
+    val task1 = new WatermarkAccumulator
+    task1.add(a0 -> 5L); task1.add(a0 -> 3L); task1.add(a1 -> 7L)
+    task1.add(b0 -> -1L) // unknown watermark: ignored
+    assert(task1.value == Map(a0 -> 5L, a1 -> 7L))
+    val task2 = new WatermarkAccumulator
+    task2.add(a0 -> 9L); task2.add(a1 -> 2L)
+    val merged = new WatermarkAccumulator
+    merged.merge(task1); merged.merge(task2)
+    assert(merged.value == Map(a0 -> 9L, a1 -> 7L))
+    // a retried or speculative task reporting the same watermarks again
+    merged.merge(task1); merged.merge(task2.copy())
+    assert(merged.value == Map(a0 -> 9L, a1 -> 7L))
+    merged.add(a0 -> 9L)
+    assert(merged.value == Map(a0 -> 9L, a1 -> 7L))
+    assert(!merged.isZero)
+    merged.reset()
+    assert(merged.isZero && merged.value.isEmpty)
+    assert(task2.copyAndReset().isZero && task2.value.nonEmpty)
   }
 }

@@ -4,8 +4,13 @@ import graft.model._
 import graft.sources.GraftBroker
 import graft.streaming._
 import graft.streaming.ForwardingEngine._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -20,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * connector-agnostic (`fromSourceFrame`) and runs identically against
  * `format("kafka")`.
  */
-class QueueSourceE2ESpec extends AnyFunSuite {
+class QueueSourceE2ESpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -59,6 +64,49 @@ class QueueSourceE2ESpec extends AnyFunSuite {
 
   private def ckpt(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-e2e-$tag").toString
+
+  /** Jobs, and the widest stage, per (query id, batch id), read from the
+    * local properties streaming sets on each job. Listener events arrive
+    * asynchronously: `drained` runs a marker job and waits until it is seen,
+    * so every earlier job has been counted. */
+  private final class TriggerJobs extends SparkListener {
+    private val jobs = scala.collection.mutable.Map.empty[(String, Long), (Int, Int)]
+    @volatile private var markerSeen = false
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = Option(e.properties)
+      if (p.exists(_.getProperty("graft.test.marker") != null)) markerSeen = true
+      else for {
+        props <- p
+        q <- Option(props.getProperty("sql.streaming.queryId"))
+        b <- Option(props.getProperty("streaming.sql.batchId"))
+      } jobs.synchronized {
+        val (n, w) = jobs.getOrElse((q, b.toLong), (0, 0))
+        jobs((q, b.toLong)) = (n + 1, math.max(w, e.stageInfos.map(_.numTasks).max))
+      }
+    }
+    def drained(): Map[(String, Long), (Int, Int)] = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.test.marker", "1")
+      try spark.range(1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      await("listener caught up")(markerSeen)
+      jobs.synchronized(jobs.toMap)
+    }
+  }
+
+  /** Runs `body` with a [[TriggerJobs]] listener attached. */
+  private def withTriggerJobs[T](body: TriggerJobs => T): T = {
+    val l = new TriggerJobs
+    spark.sparkContext.addSparkListener(l)
+    try body(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Jobs and widest stage of each trigger that read data. */
+  private def dataTriggers(q: org.apache.spark.sql.streaming.StreamingQuery,
+      l: TriggerJobs): Seq[(Long, (Int, Int))] = {
+    val seen = l.drained()
+    q.recentProgress.filter(_.numInputRows > 0).toSeq.map(_.batchId).distinct
+      .map(b => b -> seen.getOrElse((q.id.toString, b), (0, 0)))
+  }
 
   private def startEngine(
       s: JobSpec,
@@ -308,5 +356,107 @@ class QueueSourceE2ESpec extends AnyFunSuite {
       assert(batches.forall(_.numInputRows <= 3),
         batches.map(_.numInputRows).mkString(","))
     } finally q.stop()
+  }
+
+  // === the data path's shape: one job with one stage per trigger ===
+
+  test("one job per data trigger, and no shuffle between source and dispatch") {
+    GraftBroker.reset(); TestConsumer.reset()
+    TestConsumer.behaviors += "e2e-shape" -> { req =>
+      // every 4th offset is nacked so the write job also produces rows
+      val off = req.headers("kafka-offset").toLong
+      if (off % 4 == 0) DispatchResult("RESOURCE_EXHAUSTED", None, overdue = false)
+      else DispatchResult("OK", None, overdue = false)
+    }
+    val topic = "e2e-shape-topic"; val group = "e2e-shape-group"
+    val s = spec(topic, group, tiers = 0, tierDelayMs = 0L)
+    GraftBroker.createTopic(topic, 3)
+    GraftBroker.createTopic(s.rpc.dlqTopic, 1)
+    (0 until 30).foreach(i => GraftBroker.produce(topic, Some(i % 3),
+      s"k$i".getBytes, s"v$i".getBytes))
+    withTriggerJobs { l =>
+      val q = startEngine(s, "e2e-shape", Seq(topic), Map.empty, ckpt("shape"))
+      try {
+        await("group lag reaches 0")(GraftBroker.lag(group, topic).values.sum == 0L)
+        q.processAllAvailable()
+        (30 until 36).foreach(i => GraftBroker.produce(topic, Some(i % 3),
+          s"k$i".getBytes, s"v$i".getBytes))
+        q.processAllAvailable()
+        await("second batch committed")(GraftBroker.lag(group, topic).values.sum == 0L)
+      } finally q.stop()
+      val triggers = dataTriggers(q, l)
+      assert(triggers.size >= 2, triggers.toString)
+      // produce + watermark harvest + commit all ride on the store's one job
+      assert(triggers.forall(_._2._1 == 1), s"jobs per data trigger: $triggers")
+    }
+    assert((0 until 36).forall(i => TestConsumer.count("e2e-shape", s"v$i") == 1))
+    assert(GraftBroker.endOffsets(s.rpc.dlqTopic).values.sum == 9L)
+    // the same processBatch over the same source, planned as a batch
+    val outcomes = ForwardingEngine.processBatch(s, MockDispatcherFactory("e2e-shape"),
+      "local-cluster", ForwardingEngine.fromSourceFrame(
+        spark.read.format("graft-queue").option("topics", topic).load()))
+    outcomes.collect()
+    val plan = outcomes.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
+  }
+
+  test("committer over a topic-partition split across three tasks reaches the log end") {
+    GraftBroker.reset(); TestConsumer.reset()
+    TestConsumer.behaviors += "e2e-split" -> (_ => DispatchResult("OK", None, overdue = false))
+    val topic = "e2e-split-topic"; val group = "e2e-split-group"
+    val s = spec(topic, group, tiers = 0, tierDelayMs = 0L)
+    GraftBroker.createTopic(topic, 1)
+    (0 until 30).foreach(i => GraftBroker.produce(topic, Some(0), s"k$i".getBytes, s"v$i".getBytes))
+    // each addData block is one input partition of the trigger: offsets
+    // [0,10), [10,20), [20,30) of partition 0 land in three tasks, the
+    // layout Kafka's minPartitions gives a busy topic-partition
+    import spark.implicits._
+    val ms = MemoryStream[KafkaRecord](implicitly[org.apache.spark.sql.Encoder[KafkaRecord]],
+      spark.sqlContext)
+    GraftBroker.fetch(topic, 0, 0L, 30L).zipWithIndex.grouped(10).foreach { block =>
+      ms.addData(block.map { case (r, off) =>
+        KafkaRecord(r.key, r.value, topic, 0, off.toLong, 0L, Map.empty) })
+    }
+    val committer = new OffsetCommitter(new BrokerCommitTarget, group, cadenceMs = 0L)
+    withTriggerJobs { l =>
+      val q = ForwardingEngine.run(s, MockDispatcherFactory("e2e-split"), "local-cluster",
+        ms.toDS(), BrokerQueueStore, ckpt("split"), "e2e-split", committer = Some(committer))
+      try q.processAllAvailable() finally q.stop()
+      val triggers = dataTriggers(q, l)
+      assert(triggers.size == 1 && triggers.head._2._2 >= 3, s"(jobs, tasks): $triggers")
+    }
+    assert((0 until 30).forall(i => TestConsumer.count("e2e-split", s"v$i") == 1))
+    assert(GraftBroker.endOffsets(topic) == Map(0 -> 30L))
+    assert(GraftBroker.committed(group, topic, 0).contains(30L))
+  }
+
+  test("a failing queue store leaves the group's committed offsets where they were") {
+    GraftBroker.reset(); TestConsumer.reset()
+    TestConsumer.behaviors += "e2e-sinkfail" -> (_ => DispatchResult("OK", None, overdue = false))
+    val topic = "e2e-sinkfail-topic"; val group = "e2e-sinkfail-group"
+    val s = spec(topic, group, tiers = 0, tierDelayMs = 0L)
+    GraftBroker.createTopic(topic, 2)
+    (0 until 8).foreach(i => GraftBroker.produce(topic, Some(i % 2), s"k$i".getBytes, s"v$i".getBytes))
+    GraftBroker.commitGroup(group, Map((topic, 0) -> 1L))
+    // the store's action dispatches the whole batch — every watermark is in
+    // the accumulator — and then the produce fails
+    val failing = new QueueStore {
+      def produce(outcomes: Dataset[Outcome]): Unit = {
+        outcomes.count()
+        throw new IllegalStateException("queue store down")
+      }
+    }
+    val reader = spark.readStream.format("graft-queue").option("topics", topic)
+      .option("groupid", group).option("startingoffsets", "earliest")
+    val committer = new OffsetCommitter(new BrokerCommitTarget, group, cadenceMs = 0L)
+    val q = ForwardingEngine.run(s, MockDispatcherFactory("e2e-sinkfail"), "local-cluster",
+      ForwardingEngine.fromSourceFrame(reader.load()), failing, ckpt("sinkfail"),
+      "e2e-sinkfail", committer = Some(committer))
+    val e = intercept[StreamingQueryException](q.awaitTermination(60000L))
+    assert(e.getMessage.contains("queue store down"), e.getMessage)
+    assert((0 until 8).forall(i => TestConsumer.count("e2e-sinkfail", s"v$i") == 1))
+    assert(committer.commits == 0L)
+    assert(GraftBroker.committed(group, topic, 0).contains(1L))
+    assert(GraftBroker.committed(group, topic, 1).isEmpty)
   }
 }
