@@ -10,20 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 72-query suite generates far more than the default 100 cached
-      // codegen classes; with an LRU that small, the warmup pass's compiled
-      // classes (and their JIT state) are evicted before the measured pass
-      // reuses them — sequential scan over an LRU is the pathological case
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.control.GraftConf.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/session warmup so the first measured query doesn't pay session

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main for the wire-dispatch byte legs (BENCH_NOTES_r12's
   * 1 KiB finding): decomposes the leg's throughput into
@@ -86,13 +85,7 @@ object WireProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.control.GraftConf.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     val srv = okServer()

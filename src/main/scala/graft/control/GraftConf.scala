@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
  * The session configuration a production graft deployment sets — every
  * value chosen for the 100 TB / 1000-executor shape this library targets,
  * with the reasoning attached. `GraftConf(builder)` applies them;
- * local-mode tools (Bench/Profile/Verify) set the same knobs inline with
- * test-sized values.
+ * `GraftConf.local(cpus)` is the one session the local-mode tools
+ * (Bench, Verify, Profile, ...) run in, with test-sized values.
  *
  * Why these and not others:
  *  - AQE + skew-join + coalesce: runtime re-planning is the only defense
@@ -46,4 +46,21 @@ object GraftConf {
     * AFTER applying (e.g. shuffle.partitions for local runs). */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     Settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The local-mode session: `local[cpus]` with the graft planner
+    * extensions and one shuffle partition per core. Callers set their own
+    * log level. */
+  def local(cpus: Int): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    // the query suite generates far more than the default 100 cached
+    // codegen classes; with an LRU that small, the warmup pass's compiled
+    // classes (and their JIT state) are evicted before the measured pass
+    // reuses them — sequential scan over an LRU is the pathological case
+    .config("spark.sql.codegen.cache.maxEntries", "5000")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 }

@@ -19,9 +19,10 @@ import scala.collection.mutable
  *   - bounded capacity: `isFull` signals admission backpressure
  *     (the caller stops feeding instead of blocking — micro-batch style)
  *
- * Single-threaded by design: one instance lives inside a streaming state op
- * (`flatMapGroupsWithState`) keyed by (topic, partition), where Spark
- * guarantees single-writer access; no locks needed.
+ * The engine's task-local tracker: ForwardingEngine.processSlice keeps one
+ * per (topic, partition) of its slice, guarded by the slice's completion
+ * lock. It is also the reference model the cross-batch operator
+ * ([[AckStateTws]]) is tested against. Not thread-safe on its own.
  */
 object AckTrackingQueue {
   val InitialOffset: Long = -1L
@@ -35,23 +36,7 @@ object AckTrackingQueue {
     case object Nacked   extends AckStatus(1)
     case object Canceled extends AckStatus(2)
     case object Acked    extends AckStatus(3)
-    def fromRank(r: Int): AckStatus = r match {
-      case 0 => Unset
-      case 1 => Nacked
-      case 2 => Canceled
-      case _ => Acked
-    }
   }
-
-  /** Encodable queue state for Spark state stores. */
-  final case class Snapshot(
-      capacity: Int,
-      highestReceivedOffset: Long,
-      highestAckedOffset: Long,
-      highestCommittedOffset: Long,
-      headOffset: Long,
-      statuses: Seq[(Long, Int)],
-      cancelable: Seq[Long])
 }
 
 final class AckTrackingQueue(val capacity: Int = 10000) {
@@ -60,11 +45,6 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
   // insertion-ordered: offsets arrive in increasing order
   private val statuses = mutable.LinkedHashMap.empty[Long, AckStatus]
   private val cancelable = mutable.LinkedHashSet.empty[Long]
-
-  private[streaming] def restoreStatus(offset: Long, rank: Int): Unit =
-    statuses.put(offset, AckStatus.fromRank(rank))
-  private[streaming] def restoreCancelable(offset: Long): Unit =
-    cancelable.add(offset)
 
   var highestReceivedOffset: Long = InitialOffset
   var highestAckedOffset: Long = InitialOffset
@@ -160,30 +140,6 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
     if (statuses.isEmpty) return 0.0
     statuses.valuesIterator.count(_ == AckStatus.Acked).toDouble / statuses.size
   }
-
-  /** Serializable snapshot for cross-batch state stores
-    * (flatMapGroupsWithState keeps this in the Spark state store). */
-  def snapshot: AckTrackingQueue.Snapshot = AckTrackingQueue.Snapshot(
-    capacity, highestReceivedOffset, highestAckedOffset, highestCommittedOffset,
-    headOffset,
-    statuses.toSeq.map { case (o, s) => (o, s.rank) },
-    cancelable.toSeq)
-}
-
-object AckTrackingQueueRestore {
-  /** Rebuild a queue from a snapshot (inverse of [[AckTrackingQueue.snapshot]]). */
-  def restore(s: AckTrackingQueue.Snapshot): AckTrackingQueue = {
-    val q = new AckTrackingQueue(s.capacity)
-    q.highestReceivedOffset = s.highestReceivedOffset
-    q.highestAckedOffset = s.highestAckedOffset
-    q.highestCommittedOffset = s.highestCommittedOffset
-    q.headOffset = s.headOffset
-    s.statuses.foreach { case (o, rank) =>
-      q.restoreStatus(o, rank)
-    }
-    s.cancelable.foreach(q.restoreCancelable)
-    q
-  }
 }
 
 /**
@@ -197,8 +153,12 @@ object AckTrackingQueueRestore {
 final case class HeadBlockingDetector(
     criticalLoadFactor: Double = 0.9,
     minAckPercent: Double = 0.9) {
+  /** True when a queue this full and this acked is blocked by its head. */
+  def blocked(loadFactor: Double, ackedFraction: Double): Boolean =
+    loadFactor >= criticalLoadFactor && ackedFraction >= minAckPercent
+
   def detect(q: AckTrackingQueue): Option[Long] = {
-    if (q.loadFactor >= criticalLoadFactor && q.ackedFraction >= minAckPercent) {
+    if (blocked(q.loadFactor, q.ackedFraction)) {
       val o = q.lowestCancelableOffset
       if (o != AckTrackingQueue.InitialOffset) Some(o) else None
     } else None

@@ -3,7 +3,6 @@ package graft.streaming
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, IOException}
 import java.net.{InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
 /**
@@ -25,14 +24,13 @@ import java.util.concurrent.atomic.AtomicBoolean
  * max frame size is split.
  *
  * Client subset limits (by design, alongside the HPACK subset above): the
- * client never SENDS WINDOW_UPDATE — each request/response exchange
- * consumes well under the 65535-byte initial windows and completes before
- * reuse, so the window never runs dry against the bundled server — and
- * neither side emits or reassembles CONTINUATION frames (header blocks
- * here are far below the max frame size). A conformant third-party peer
- * that streams >64 KiB of response DATA or splits header blocks would
- * stall against this client; the dispatcher interoperates fully only with
- * [[Http2ConsumerServer]].
+ * client never SENDS WINDOW_UPDATE — a Dispatch response carries an empty
+ * gRPC body, and the bundled server does not budget its DATA against the
+ * client's windows — and neither side emits or reassembles CONTINUATION
+ * frames (header blocks here are far below the max frame size). A
+ * conformant third-party peer that streams >64 KiB of response DATA or
+ * splits header blocks would stall against this client; the dispatcher
+ * interoperates fully only with [[Http2ConsumerServer]].
  */
 object Http2 {
 
@@ -192,134 +190,18 @@ object Http2 {
 }
 
 /**
- * A [[Dispatcher]] that speaks the HTTP/2 framing above over pooled TCP
- * connections: per-dispatch HEADERS + DATA(+END_STREAM) on a fresh odd
- * stream id, response read through trailers, with the SAME deadline →
- * DEADLINE_EXCEEDED/UNAVAILABLE mapping as [[SocketDispatcher]]. The
- * kafka-* metadata headers ride in the request HEADERS (the reference
- * attaches them as gRPC metadata, GrpcDispatcher.java:126-199); the
- * response's kafka-action arrives as a TRAILER and feeds
+ * The HTTP/2 [[Dispatcher]]: the framing above with many concurrent
+ * streams per connection — RFC 9113's concurrency model and the
+ * reference's production shape (250 streams per channel,
+ * GrpcDispatcherConfiguration.java:10; up to 2,000 concurrent streams per
+ * pipeline). A dispatch writes its HEADERS + DATA(+END_STREAM) on a fresh
+ * odd stream id and releases the connection immediately, and a reader
+ * thread per connection demultiplexes interleaved response frames BY
+ * STREAM ID — correlation is carried by the protocol itself, not by
+ * response order. The kafka-* metadata headers ride in the request HEADERS
+ * (the reference attaches them as gRPC metadata, GrpcDispatcher.java:126-199);
+ * the response's kafka-action arrives as a TRAILER and feeds
  * `Codes.codeFor`'s action-override path.
- */
-final class Http2Dispatcher(host: String, port: Int, rpcTimeoutMs: Long)
-    extends Dispatcher {
-  import Http2._
-
-  private final class Conn(val sock: Socket) {
-    // buffered: a request's HEADERS+DATA (and a response's three frames)
-    // cost one syscall per flush instead of one per 9-byte frame header
-    val in = new DataInputStream(new java.io.BufferedInputStream(sock.getInputStream, 1 << 16))
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16))
-    var nextStream = 1 // client streams are odd
-    def takeStream(): Int = { val s = nextStream; nextStream += 2; s }
-  }
-
-  private val idle = new ConcurrentLinkedQueue[Conn]()
-  private val closed = new AtomicBoolean(false)
-
-  private def remainMs(deadlineNs: Long): Int =
-    math.max(1L, (deadlineNs - System.nanoTime()) / 1000000L).toInt
-
-  private def connect(deadlineNs: Long): Conn = {
-    val s = new Socket()
-    s.connect(new InetSocketAddress(host, port), remainMs(deadlineNs))
-    s.setTcpNoDelay(true)
-    val c = new Conn(s)
-    // connection preface + our (empty) SETTINGS; the server's SETTINGS and
-    // its ACK of ours are consumed by the response read loop, which skips
-    // connection-level frames
-    c.out.write(Preface)
-    writeFrame(c.out, SETTINGS, 0, 0, Array.emptyByteArray)
-    c.out.flush()
-    c
-  }
-
-  def dispatch(req: DispatchRequest): DispatchResult = {
-    val deadlineNs = System.nanoTime() + rpcTimeoutMs * 1000000L
-    def overdueNow = System.nanoTime() >= deadlineNs
-    var conn: Conn = null
-    try {
-      conn = Option(idle.poll()).getOrElse(connect(deadlineNs))
-      val sid = conn.takeStream()
-      val reqHeaders =
-        Seq(":method" -> "POST", ":scheme" -> "http",
-          ":path" -> "/kafka.consumerproxy.Consumer/Dispatch",
-          ":authority" -> s"$host:$port",
-          "content-type" -> "application/grpc", "te" -> "trailers") ++
-          req.headers.toSeq.sortBy(_._1)
-      writeFrame(conn.out, HEADERS, END_HEADERS, sid, encodeHeaders(reqHeaders))
-      writeData(conn.out, sid, grpcFrame(req.payload), endStream = true)
-      conn.out.flush()
-      // read until this stream's END_STREAM trailers; the remaining
-      // per-message budget bounds every read
-      var trailers = Map.empty[String, String]
-      var done = false
-      while (!done) {
-        conn.sock.setSoTimeout(remainMs(deadlineNs))
-        val f = readFrame(conn.in)
-        f.tpe match {
-          case SETTINGS =>
-            if ((f.flags & ACK) == 0) { // ack the server's settings
-              writeFrame(conn.out, SETTINGS, ACK, 0, Array.emptyByteArray)
-              conn.out.flush()
-            }
-          case PING =>
-            writeFrame(conn.out, PING, ACK, 0, f.payload); conn.out.flush()
-          case WINDOW_UPDATE | GOAWAY => ()
-          case HEADERS if f.streamId == sid =>
-            trailers ++= decodeHeaders(f.payload)
-            if ((f.flags & END_STREAM) != 0) done = true
-          case DATA if f.streamId == sid => () // empty Dispatch response body
-          case _ => ()
-        }
-      }
-      // a connection that ran its 31-bit stream space out retires cleanly
-      if (closed.get() || conn.nextStream > Int.MaxValue - 2 || !idle.offer(conn))
-        conn.sock.close()
-      conn = null
-      val status = codeToStatus(
-        trailers.get("grpc-status").flatMap(_.toIntOption).getOrElse(2))
-      DispatchResult(status, trailers.get("kafka-action").filter(_.nonEmpty), overdueNow)
-    } catch {
-      case _: SocketTimeoutException =>
-        DispatchResult(graft.model.GrpcStatus.DEADLINE_EXCEEDED, None, overdue = true)
-      case _: IOException =>
-        DispatchResult(graft.model.GrpcStatus.UNAVAILABLE, None, overdue = overdueNow)
-    } finally {
-      // non-null ⇔ not pooled: an errored connection may have frames in
-      // flight for an abandoned stream and must never serve another RPC
-      if (conn != null)
-        try conn.sock.close() catch { case _: IOException => () }
-    }
-  }
-
-  override def close(): Unit = {
-    closed.set(true)
-    var c = idle.poll()
-    while (c != null) {
-      try c.sock.close() catch { case _: IOException => () }
-      c = idle.poll()
-    }
-  }
-}
-
-/** Serializable factory: one pool per executor task, like
-  * [[SocketDispatcherFactory]]. */
-final case class Http2DispatcherFactory(host: String, port: Int, rpcTimeoutMs: Long)
-    extends DispatcherFactory {
-  def create(): Dispatcher = new Http2Dispatcher(host, port, rpcTimeoutMs)
-}
-
-/**
- * MULTIPLEXED HTTP/2 dispatcher: many concurrent streams per connection —
- * RFC 9113's actual concurrency model and the reference's production
- * shape (250 streams per channel, GrpcDispatcherConfiguration.java:10;
- * up to 2,000 concurrent streams per pipeline). The sync [[Http2Dispatcher]]
- * above holds ONE stream per pooled connection and waits out a full round
- * trip per RPC; here a dispatch writes its HEADERS+DATA on a fresh odd
- * stream id and releases the connection immediately, and a reader thread
- * per connection demultiplexes interleaved response frames BY STREAM ID —
- * correlation is carried by the protocol itself, not by response order.
  *
  * That stream-id correlation buys a failure-isolation property the framed
  * socket protocol cannot have: a stream whose deadline expires is simply
@@ -367,9 +249,8 @@ final class MultiplexedHttp2Dispatcher(
     /** Set when the 31-bit stream space runs out: the slot dials a
       * REPLACEMENT for new dispatches while this connection keeps
       * serving its in-flight streams — graceful retirement, never a
-      * poison (the sync dispatcher's retire-after-response rule, lifted
-      * to many streams). The reader closes the connection once retiring
-      * and idle. */
+      * poison. The reader closes the connection once retiring and
+      * idle. */
     @volatile var retiring = false
 
     out.write(Preface)

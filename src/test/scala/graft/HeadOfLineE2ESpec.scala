@@ -3,7 +3,7 @@ package graft
 import graft.model._
 import graft.sources.{GraftBroker, GraftQueue}
 import graft.streaming._
-import graft.streaming.AckStateOp.AckEvent
+import graft.streaming.AckStateTws.AckEvent
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
  * retry topic and the commit watermark advances past it — the reference's
  * BlockingQueueStubManager.java:43-376 cancel flow with the cancel→code
  * routing of ProcessorImpl.java:750-757, expressed through
- * [[AckStateOp.signals]] + [[AckStateOp.runMitigation]].
+ * [[AckStateTws.signals]] + [[AckStateTws.runMitigation]].
  */
 class HeadOfLineE2ESpec extends AnyFunSuite {
 
@@ -24,6 +24,8 @@ class HeadOfLineE2ESpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.streaming.metricsEnabled", "false")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -75,7 +77,7 @@ class HeadOfLineE2ESpec extends AnyFunSuite {
     val watermarks = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val diverted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val ckpt = java.nio.file.Files.createTempDirectory("hol-e2e").toString
-    val q = AckStateOp.runMitigation(events, capacity = 10,
+    val q = AckStateTws.runMitigation(events, capacity = 10,
       HeadBlockingDetector(), ckpt, "hol-mitigation") { s =>
       if (s.kind == "divert") {
         diverted.add(s.divertOffset)

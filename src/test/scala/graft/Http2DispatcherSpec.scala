@@ -52,7 +52,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
     val server = new Http2ConsumerServer(_ =>
       DispatchResult(GrpcStatus.OK, None, overdue = false))
     try {
-      val f = Http2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 5000)
+      val f = MultiplexedHttp2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 5000)
       val n = 200
       val out = ForwardingEngine.processBatch(
         spec1, f, "local-cluster", recs((1 to n).map(i => (s"k$i", s"m$i")))).collect()
@@ -76,7 +76,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
       case _          => DispatchResult(GrpcStatus.INVALID_ARGUMENT, None, overdue = false)
     })
     try {
-      val f = Http2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 5000)
+      val f = MultiplexedHttp2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 5000)
       // unrouted outcomes (SKIP) carry no outValue; key by physical offset
       // (recs assigns offset = input index)
       val names = Seq("retry-me", "skip-me", "stash-me", "dlq-me")
@@ -102,7 +102,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
       DispatchResult(GrpcStatus.OK, None, overdue = false)
     })
     try {
-      val f = Http2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 150)
+      val f = MultiplexedHttp2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 150)
       val round1 = ForwardingEngine.processBatch(
         spec1, f, "local-cluster",
         recs(Seq(("k1", "fast1"), ("k2", "slow"), ("k3", "fast2")))).collect()
@@ -124,7 +124,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
     val probe = new java.net.ServerSocket(0)
     val deadPort = probe.getLocalPort
     probe.close()
-    val f = Http2DispatcherFactory("127.0.0.1", deadPort, rpcTimeoutMs = 2000)
+    val f = MultiplexedHttp2DispatcherFactory("127.0.0.1", deadPort, rpcTimeoutMs = 2000)
     val out = ForwardingEngine.processBatch(
       spec1, f, "local-cluster", recs(Seq(("k1", "m1")))).collect()
     assert(out.length == 1 && out.head.code == "INVALID" && out.head.destination == "")
@@ -143,7 +143,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
     val server = new Http2ConsumerServer(req =>
       DispatchResult(GrpcStatus.OK, Some(digest(req)), overdue = false))
     try {
-      val d = new Http2Dispatcher("127.0.0.1", server.port, rpcTimeoutMs = 5000)
+      val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.port, rpcTimeoutMs = 5000)
       try {
         val rng = new scala.util.Random(7)
         for (i <- 0 until 40) {
@@ -175,7 +175,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
     val before = serveThreads()
     val server = new Http2ConsumerServer(_ =>
       DispatchResult(GrpcStatus.OK, None, overdue = false))
-    val d = new Http2Dispatcher("127.0.0.1", server.port, rpcTimeoutMs = 5000)
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.port, rpcTimeoutMs = 5000)
     try {
       assert(d.dispatch(DispatchRequest("x".getBytes("UTF-8"), Map.empty))
         .statusCode == GrpcStatus.OK)
@@ -396,11 +396,11 @@ class Http2DispatcherSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("engine E2E: multiplexed and sync HTTP/2 dispatchers route every record identically") {
-    val server = new Http2ConsumerServer(req => {
-      val off = req.headers("kafka-offset").toLong
-      DispatchResult(GrpcStatus.all((off % GrpcStatus.all.size).toInt), None, overdue = false)
-    })
+  test("engine E2E: multiplexed HTTP/2 and in-process dispatchers route every record identically") {
+    // one handler, reached over the wire and called in-process
+    val inProcess = graft.operators.PipelineOps.DeterministicDispatcherFactory
+    val handler = inProcess.create()
+    val server = new Http2ConsumerServer(handler.dispatch)
     try {
       val n = 400
       def rs(): Dataset[KafkaRecord] =
@@ -413,9 +413,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
           .sortBy(x => (x._1, x._2, x._3)).toSeq
       val viaMux = routed(
         MultiplexedHttp2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 10000))
-      val viaSync = routed(
-        Http2DispatcherFactory("127.0.0.1", server.port, rpcTimeoutMs = 10000))
-      assert(viaMux.size == n && viaMux == viaSync)
+      assert(viaMux.size == n && viaMux == routed(inProcess))
     } finally server.close()
   }
 

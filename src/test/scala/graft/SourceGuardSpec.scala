@@ -1,0 +1,39 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Source-tree guards that keep two consolidations from being undone: every
+  * local Spark session comes from `GraftConf.local`, and the cross-batch ack
+  * tracker is one operator, `AckStateTws`. Runs from the project root. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private def files(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$root not found under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+    finally walk.close()
+  }
+
+  private def containing(paths: Seq[Path], text: String): Seq[Path] =
+    paths.filter(p => Files.readString(p).contains(text))
+
+  test("SparkSession.builder() appears in src/main only in control/GraftConf.scala") {
+    val offenders = containing(
+      files("src/main/scala").filterNot(_.endsWith(Paths.get("control", "GraftConf.scala"))),
+      "SparkSession.builder()")
+    assert(offenders.isEmpty,
+      s"build local sessions with GraftConf.local(cpus), not by hand: ${offenders.mkString(", ")}")
+  }
+
+  test("the retired flatMapGroupsWithState ack operator is named nowhere under src/") {
+    val retired = "AckState" + "Op" // split, so this file does not name it either
+    val offenders = containing(files("src"), retired)
+    assert(offenders.isEmpty,
+      s"AckStateTws is the one cross-batch ack operator; $retired is named in ${offenders.mkString(", ")}")
+  }
+}

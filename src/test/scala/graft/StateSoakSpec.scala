@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.{AckStateTws, DelayGateTws, PackStream}
-import graft.streaming.AckStateOp.AckEvent
+import graft.streaming.AckStateTws.AckEvent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
