@@ -799,10 +799,12 @@ object Bench {
     // an empty clean subset (every rep tagged degraded — the official r15
     // run) must read as "no clean reading", not as zero throughput: the
     // key goes JSON null, never a fabricated 0.0 (r15 verdict #3)
+    def r4(d: Double): String = num(math.rint(d * 10000) / 10000)
+    def r1(d: Double): String = num(math.rint(d * 10) / 10)
     def cleanMedian(reps: Seq[Double], probes: Seq[Double]): String = {
       val ok = reps.zip(probes)
         .collect { case (r, p) if r > 0 && !isDegraded(p) => r }.sorted
-      if (ok.isEmpty) "null" else (math.rint(ok(ok.size / 2) * 10) / 10).toString
+      if (ok.isEmpty) "null" else r1(ok(ok.size / 2))
     }
     val degradedTotal = allProbes.count(isDegraded)
 
@@ -812,8 +814,6 @@ object Bench {
     // ~2000-char log-tail capture window, and printing it is how rounds
     // 10-16 lost their official per-run record (the tail cut the line's
     // head off and it never parsed). stdout gets the compact line below.
-    def r4(d: Double): Double = math.rint(d * 10000) / 10000
-    def r1(d: Double): Double = math.rint(d * 10) / 10
     val qsCompact = results.map { case (k, v, _, _) => "\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     // per-query reps, opt-in (SPARK_GRAFT_QUERY_REPS=1): the min above is
@@ -853,32 +853,43 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
-    // The official stdout record is ONE COMPACT JSON line. The driver's
-    // log-tail capture keeps only the last ~2000 characters of the run log
-    // (every archived BENCH_rN shows exactly 2000 tail chars, with the
-    // former ~8.4 KB full line truncated mid-stream and `parsed: null`
-    // since round 10) — and the 177-entry per-query map alone is ≥4.5 KB,
-    // so per-query seconds mathematically CANNOT ride the stdout line.
-    // The FULL document (identical schema plus the per-query map, rep
-    // arrays and wire/stream telemetry) is the file written above; the
-    // stdout line carries the totals, the sanity-gate counts, every leg's
-    // headline rate and a pointer to that file, sized (~1.3 KB) to survive
-    // the capture window intact so round-over-round totals parse again.
-    val compactLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":{},"queries_file":"$outFile","queries_note":"per-query seconds are in queries_file (full document, same schema): the 177-entry map exceeds the 2KB log-tail capture window","sf":"$sfDir","n_queries":${results.size},"failed":${results.count(_._3 < 0)},"forward_msgs_per_sec":${r1(fwdRate)},"socket_forward_msgs_per_sec":${r1(socketFwdRate)},"socket_forward_msgs_per_sec_median_clean":${cleanMedian(socketLeg.reps.toSeq, socketLeg.probes.toSeq)},"socket_sync_forward_msgs_per_sec":${r1(socketSyncFwdRate)},"http2_forward_msgs_per_sec":${r1(h2FwdRate)},"http2_forward_msgs_per_sec_median_clean":${cleanMedian(h2Leg.reps.toSeq, h2Leg.probes.toSeq)},"wire_bytes_per_sec_1k":${r1(byteLeg1k.best)},"wire_bytes_per_sec_16k":${r1(byteLeg16k.best)},"stream_msgs_per_sec":${r1(streamRate)},"stream_msgs_per_sec_median_clean":${cleanMedian(streamReps, streamProbes)},"queue_stream_msgs_per_sec":${r1(queueStreamRate)},"queue_stream_msgs_per_sec_median_clean":${cleanMedian(queueStreamReps, queueStreamProbes)},"queue_stream_ratio":${r4(queueRatio)},"sustained_sec":$sustainSec,"sustained_stream_msgs_per_sec":${r1(susStream)},"sustained_stream_last_third":${r1(susStreamLast)},"sustained_queue_msgs_per_sec":${r1(susQueue)},"sustained_queue_last_third":${r1(susQueueLast)},"probe_base_sec":${r4(probeBase)},"degraded_reps_total":$degradedTotal,"sanity_probe_sec":${r4(sanityStart)},"sanity_probe_end_sec":${r4(sanityEnd)},"code_cache_mb_end":${r1(ccEnd)},"measured_runs":3}"""
-    println(compactLine)
-    // assert AFTER the JSON prints so the record always lands; a tripped
-    // floor surfaces as a nonzero exit the driver flags
-    assert(pairRatios.isEmpty || queueRatio >= ratioMin,
-      f"connector leg at ${queueRatio * 100}%.0f%% of its paired MemoryStream " +
-        f"reps (median of per-pair ratios, floor ${ratioMin * 100}%.0f%%) — " +
-        "connector overhead grew")
+    val compactLine = compactRecord(results, outFile, sfDir, Seq(
+      "forward_msgs_per_sec" -> r1(fwdRate),
+      "socket_forward_msgs_per_sec" -> r1(socketFwdRate),
+      "socket_forward_msgs_per_sec_median_clean" -> cleanMedian(socketLeg.reps.toSeq, socketLeg.probes.toSeq),
+      "socket_sync_forward_msgs_per_sec" -> r1(socketSyncFwdRate),
+      "http2_forward_msgs_per_sec" -> r1(h2FwdRate),
+      "http2_forward_msgs_per_sec_median_clean" -> cleanMedian(h2Leg.reps.toSeq, h2Leg.probes.toSeq),
+      "wire_bytes_per_sec_1k" -> r1(byteLeg1k.best),
+      "wire_bytes_per_sec_16k" -> r1(byteLeg16k.best),
+      "stream_msgs_per_sec" -> r1(streamRate),
+      "stream_msgs_per_sec_median_clean" -> cleanMedian(streamReps, streamProbes),
+      "queue_stream_msgs_per_sec" -> r1(queueStreamRate),
+      "queue_stream_msgs_per_sec_median_clean" -> cleanMedian(queueStreamReps, queueStreamProbes),
+      "queue_stream_ratio" -> r4(queueRatio),
+      "sustained_sec" -> sustainSec.toString,
+      "sustained_stream_msgs_per_sec" -> r1(susStream),
+      "sustained_stream_last_third" -> r1(susStreamLast),
+      "sustained_queue_msgs_per_sec" -> r1(susQueue),
+      "sustained_queue_last_third" -> r1(susQueueLast),
+      "probe_base_sec" -> r4(probeBase),
+      "degraded_reps_total" -> degradedTotal.toString,
+      "sanity_probe_sec" -> r4(sanityStart),
+      "sanity_probe_end_sec" -> r4(sanityEnd),
+      "code_cache_mb_end" -> r1(ccEnd),
+      "measured_runs" -> "3"))
     // Hard sanity gate: a bench that published zeroed legs or failed
     // queries must be LOUD (nonzero exit + the first real exception), not
     // a quietly-archived JSON — round 6 shipped failed:30 and two 0.0 legs
     // without anyone noticing until the next judge pass. Diagnostic knobs
     // (legs-only / single-query) relax only the gates their mode disables.
     val gateErrors = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the connector-overhead floor: a tripped floor is a gate error, so
+    // the run still exits nonzero but prints no stack trace after the record
+    if (pairRatios.nonEmpty && queueRatio < ratioMin)
+      gateErrors += f"connector leg at ${queueRatio * 100}%.0f%% of its paired MemoryStream " +
+        f"reps (median of per-pair ratios, floor ${ratioMin * 100}%.0f%%) — " +
+        "connector overhead grew"
     if (results.count(_._3 < 0) > 0) {
       val failedNames = results.filter(_._3 < 0).map(_._1)
       gateErrors += s"${failedNames.size} queries failed: ${failedNames.take(10).mkString(", ")}"
@@ -901,11 +912,43 @@ object Bench {
       gateErrors += "sustained_stream_msgs_per_sec is 0 — sustained MemoryStream window produced nothing"
     if (sustainSec > 0 && queueSustainThunk.nonEmpty && susQueue <= 0)
       gateErrors += "sustained_queue_msgs_per_sec is 0 — sustained connector window produced nothing"
-    if (gateErrors.nonEmpty) {
-      gateErrors.foreach(e => System.err.println(s"[bench] SANITY GATE: $e"))
-      spark.stop()
-      sys.exit(1)
-    }
+    gateErrors.foreach(e => System.err.println(s"[bench] SANITY GATE: $e"))
+    // the record is the LAST line the run prints: the gate messages and
+    // Spark's shutdown logging come first, so only the build tool's own
+    // closing lines can follow it into the log tail
     spark.stop()
+    println(compactLine)
+    if (gateErrors.nonEmpty) sys.exit(1)
+  }
+
+  /** A JSON number in plain decimal form: `Double.toString` switches to
+    * exponent form at 1e7 (`5.62778572E7`), and the record's readers take
+    * plain decimals only. A non-finite value has no JSON number: null. */
+  private[graft] def num(d: Double): String =
+    if (d.isNaN || d.isInfinite) "null"
+    else java.math.BigDecimal.valueOf(d).stripTrailingZeros.toPlainString
+
+  /** The official stdout record: ONE compact JSON line, `legs` being
+    * (key, rendered JSON value) pairs in print order. The run log is read
+    * from its last ~2000 characters only, and the 177-entry per-query map
+    * alone is ≥4.5 KB, so per-query seconds cannot ride this line: the
+    * full document (same schema plus the per-query map, rep arrays and
+    * wire/stream telemetry) is `outFile`. This line carries the totals, the
+    * sanity-gate counts, every leg's headline rate and a pointer to that
+    * file, sized (~1.3 KB) to fit that tail whole. */
+  private[graft] def compactRecord(
+      results: Seq[(String, Double, Long, Seq[Double])], outFile: String, sfDir: String,
+      legs: Seq[(String, String)]): String = {
+    val head = Seq(
+      "metric" -> "\"total\"",
+      "value" -> num(math.rint(results.map(_._2).sum * 10000) / 10000),
+      "unit" -> "\"sec\"",
+      "queries" -> "{}",
+      "queries_file" -> s""""$outFile"""",
+      "queries_note" -> "\"per-query seconds are in queries_file (full document, same schema): the 177-entry map exceeds the 2KB log-tail capture window\"",
+      "sf" -> s""""$sfDir"""",
+      "n_queries" -> results.size.toString,
+      "failed" -> results.count(_._3 < 0).toString)
+    (head ++ legs).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   }
 }

@@ -13,8 +13,9 @@ package graft
   *     in-flight frames per connection, the reference's
   *     concurrent-streams-per-pipeline model) — isolating protocol shape
   *     from engine cost;
-  *  3. the full engine byte-leg path (processSlice + pool)
-  *     at 1 KiB, the exact BENCH shape, for both dispatcher forms.
+  *  3. the full engine byte-leg path (processSlice over the executor's
+  *     resident dispatcher and shared dispatch pool) at 1 KiB, the exact
+  *     BENCH shape, for both dispatcher forms.
   *
   * Prints one JSON line; run with SPARK_GRAFT_SF_DIR set. Findings are
   * recorded in docs/BENCH_NOTES_r13.md.

@@ -49,7 +49,6 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
   var highestReceivedOffset: Long = InitialOffset
   var highestAckedOffset: Long = InitialOffset
   var highestCommittedOffset: Long = InitialOffset
-  var headOffset: Long = InitialOffset
 
   def size: Int = statuses.size
   def isFull: Boolean = statuses.size >= capacity
@@ -61,7 +60,6 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
     if (offset <= highestReceivedOffset) return false
     if (isFull) return false
     if (highestReceivedOffset == InitialOffset) {
-      headOffset = offset
       highestCommittedOffset = offset
       highestAckedOffset = offset
     }
@@ -90,16 +88,14 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
           val it = statuses.iterator
           var committed = highestCommittedOffset
           var purge = true
-          var next = InitialOffset
           while (purge && it.hasNext) {
             val (o, s) = it.next()
             if (s == AckStatus.Acked) committed = o + 1
-            else { purge = false; next = o }
+            else purge = false
           }
           while (statuses.nonEmpty && statuses.head._1 < committed)
             statuses.remove(statuses.head._1)
           highestCommittedOffset = committed
-          headOffset = if (next != InitialOffset) next else committed
           if (highestAckedOffset < offset) highestAckedOffset = offset
           committed
         } else {

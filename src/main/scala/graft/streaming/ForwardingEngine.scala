@@ -20,9 +20,12 @@ import org.apache.spark.util.AccumulatorV2
  *  - unwrap + filter: columnar (`ProcessorMessage.of` equivalent) — decode
  *    the DLQMetadata key envelope on wrapped topics, drop replication loops
  *    by `original_cluster` header.
- *  - dispatch: executor-side `mapPartitions` — per-task async dispatch pool
- *    with Vegas-adaptive concurrency and the real AckTrackingQueue
- *    computing the contiguous commit watermark out-of-order-safely.
+ *  - dispatch: executor-side `mapPartitions` over executor-resident
+ *    dispatch state — one dispatcher per (factory, security) and one shared
+ *    pool of daemon threads, lent to every slice ([[DispatcherRegistry]],
+ *    [[SliceExecutor]]) — with per-slice Vegas-adaptive concurrency and the
+ *    real AckTrackingQueue computing the contiguous commit watermark
+ *    out-of-order-safely.
  *  - route: pure model functions (code → escalation → destination).
  *  - produce: one Kafka batch write with the per-row `topic` column
  *    (Kafka sink routes natively); tests plug an in-memory topic store.
@@ -152,6 +155,27 @@ object ForwardingEngine {
     "kafka-retrycount" -> m.retryCount.toString,
     "kafka-attemptcount" -> attempt.toString)
 
+  /** This executor's dispatchers, lent to every slice. An idle sweep closes
+    * what stopped jobs left behind even if no slice borrows again. */
+  private[graft] lazy val residents: DispatcherRegistry = {
+    val r = new DispatcherRegistry(() => System.nanoTime())
+    new java.util.Timer("graft-dispatcher-sweep", true)
+      .schedule(new java.util.TimerTask { def run(): Unit = r.evictIdle() }, 10000L, 10000L)
+    r
+  }
+
+  /** This executor's dispatch threads: daemons, started on demand and
+    * retired after 60 s idle. Slices reach it only through a
+    * [[SliceExecutor]], which bounds each slice's share. */
+  private[graft] lazy val dispatchPool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-dispatch-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
   /**
    * Process one partition-slice of records: dispatch each through the
    * Dispatcher with ack tracking, then compute routing outcomes.
@@ -160,6 +184,9 @@ object ForwardingEngine {
    * few (topic,partition)s; an AckTrackingQueue per (topic,partition)
    * computes the commit watermark exactly as the reference does. Once every
    * record is terminal, each outcome's watermark goes into `watermarks`.
+   * The dispatcher and the dispatch threads are the executor's
+   * ([[residents]], [[dispatchPool]]); the limiter, token buckets, ack
+   * queues and latency tracker are the slice's own.
    */
   def processSlice(
       spec: JobSpec,
@@ -169,14 +196,14 @@ object ForwardingEngine {
       holDetector: HeadBlockingDetector = HeadBlockingDetector(),
       watermarks: Option[WatermarkAccumulator] = None)(
       records: Iterator[KafkaRecord]): Iterator[Outcome] = {
-    import java.util.concurrent.{CompletableFuture, Executors, TimeUnit}
+    import java.util.concurrent.{CompletableFuture, TimeUnit}
 
-    val dispatcher = dispatcherFactory.create(spec.security)
     val poolSize = {
       val mi = spec.flowControl.maxInflightMessages
       if (mi >= Double.MaxValue) 32 else math.max(1, math.min(mi.toInt, 64))
     }
-    val pool = Executors.newFixedThreadPool(poolSize)
+    val dispatcher = residents.borrow(dispatcherFactory, spec.security)
+    val pool = new SliceExecutor(dispatchPool, poolSize)
     val vegas = new VegasLimiter(initialLimit = math.min(100, poolSize * 4),
       maxLimit = poolSize * 8)
     val latency = new LatencyTracker()
@@ -304,13 +331,13 @@ object ForwardingEngine {
       CompletableFuture.allOf(pending.toSeq: _*).get(10, TimeUnit.MINUTES)
     }
     // the completion barrier runs inside the same try: on the success path
-    // it awaits every handler; on any failure (wedge require, dispatch
-    // explosion) the finally still tears down the pool and RPC channels —
-    // a failed task previously leaked 64 non-daemon threads + one channel
-    // pool per Spark retry on the same executor JVM
+    // it awaits every handler; on any failure (wedge require, upstream
+    // throw, task kill) the finally drops the slice's queued dispatches and
+    // hands the dispatcher back. Running dispatches finish by their RPC
+    // deadline; the shared threads are never interrupted.
     finally {
-      pool.shutdownNow()
-      dispatcher.close()
+      pool.close()
+      residents.giveBack(dispatcherFactory, spec.security)
     }
     // degraded-consumer health signal (reference: LatencyTracker median-vs-
     // timeout check feeding KafkaPipelineIssue)
@@ -442,14 +469,98 @@ trait Dispatcher extends java.io.Closeable {
   override def close(): Unit = ()
 }
 
-/** Serializable factory — one Dispatcher per executor task (mirrors the
-  * per-pipeline gRPC channel pool). Security-aware factories override the
-  * two-arg form to build TLS channels / verify service identities from the
-  * job's SecurityConfig (reference: job.proto:370-379; the fetcher side
-  * keys channel pools by (cluster, isSecure) — ClusterAndIsSecureKey.java). */
+/** Serializable factory — one Dispatcher per executor per (factory,
+  * security), lent to every slice by [[DispatcherRegistry]] (mirrors the
+  * per-pipeline gRPC channel pool, which outlives any one batch). The
+  * registry keys on the factory's value equality, so a factory must be a
+  * case class or an object: two equal factories must be interchangeable,
+  * and a factory without value equality gets a new dispatcher in every
+  * task. A dispatcher must serve concurrent callers and re-dial a dead
+  * connection itself. Security-aware factories override the two-arg form
+  * to build TLS channels / verify service identities from the job's
+  * SecurityConfig (reference: job.proto:370-379; the fetcher side keys
+  * channel pools by (cluster, isSecure) — ClusterAndIsSecureKey.java). */
 trait DispatcherFactory extends Serializable {
   def create(): Dispatcher
   def create(security: graft.model.SecuritySpec): Dispatcher = create()
+}
+
+/** Lends one [[Dispatcher]] per (factory, security) to every slice that
+  * asks for it. A slice never closes what it borrowed; an entry that no
+  * slice has held for [[DispatcherRegistry.IdleNs]] is closed and removed,
+  * and the next borrow creates a new one. The dispatchers re-dial dead or
+  * retired connections themselves, so the registry keeps no health state. */
+private[graft] final class DispatcherRegistry(clock: () => Long) {
+  private final class Entry(val dispatcher: Dispatcher) {
+    var borrowers = 0
+    var lastUsedNs = 0L
+  }
+  private val entries = scala.collection.mutable.HashMap.empty[(DispatcherFactory, SecuritySpec), Entry]
+
+  def borrow(factory: DispatcherFactory, security: SecuritySpec): Dispatcher = {
+    evictIdle()
+    synchronized {
+      val e = entries.getOrElseUpdate((factory, security), new Entry(factory.create(security)))
+      e.borrowers += 1
+      e.lastUsedNs = clock()
+      e.dispatcher
+    }
+  }
+
+  def giveBack(factory: DispatcherFactory, security: SecuritySpec): Unit = synchronized {
+    entries.get((factory, security)).foreach { e =>
+      e.borrowers -= 1
+      e.lastUsedNs = clock()
+    }
+  }
+
+  /** Close and remove every entry no slice has held for the idle window. */
+  def evictIdle(): Unit = {
+    val idle = synchronized {
+      val now = clock()
+      val gone = entries.filter { case (_, e) => e.borrowers == 0 && now - e.lastUsedNs > DispatcherRegistry.IdleNs }
+      entries --= gone.keys
+      gone.values.map(_.dispatcher)
+    }
+    idle.foreach(d => try d.close() catch { case scala.util.control.NonFatal(_) => () })
+  }
+}
+
+private[graft] object DispatcherRegistry {
+  val IdleNs: Long = 60L * 1000000000L
+}
+
+/** One slice's share of the executor's shared dispatch pool: at most
+  * `limit` of its tasks run at once, the rest wait in its own queue.
+  * `close` drops what is still queued; what runs finishes on its own. */
+private[graft] final class SliceExecutor(shared: java.util.concurrent.Executor, limit: Int)
+    extends java.util.concurrent.Executor {
+  private val queued = new java.util.ArrayDeque[Runnable]()
+  private var running = 0
+  private var closed = false
+
+  def execute(r: Runnable): Unit = {
+    val start = synchronized {
+      if (closed) false
+      else if (running < limit) { running += 1; true }
+      else { queued.addLast(r); false }
+    }
+    if (start) shared.execute(() => drain(r))
+  }
+
+  private def drain(first: Runnable): Unit = {
+    var next = first
+    while (next != null) {
+      try next.run() catch { case scala.util.control.NonFatal(_) => () }
+      next = synchronized {
+        val n = if (closed) null else queued.pollFirst()
+        if (n == null) running -= 1
+        n
+      }
+    }
+  }
+
+  def close(): Unit = synchronized { closed = true; queued.clear() }
 }
 
 /** Where routed (retry/DLQ/resq) records go. In production this is the Kafka

@@ -488,7 +488,10 @@ object MultiplexedHttp2Dispatcher {
   val MaxConcurrentStreams = 250
 }
 
-/** Serializable factory for the multiplexed HTTP/2 dispatcher. */
+/** Serializable factory for the multiplexed HTTP/2 dispatcher. The
+  * executor holds one dispatcher per factory value, so `connections` is
+  * the connection count per executor per job, as in the reference's
+  * channel pool. */
 final case class MultiplexedHttp2DispatcherFactory(
     host: String, port: Int, rpcTimeoutMs: Long, connections: Int = 4)
     extends DispatcherFactory {

@@ -121,9 +121,9 @@ final class SocketDispatcher(host: String, port: Int, rpcTimeoutMs: Long)
   }
 }
 
-/** Serializable factory: each executor task builds its own dispatcher with
-  * its own connection pool (one pool per pipeline task, like the
-  * per-pipeline channel pool in the reference). */
+/** Serializable factory: each executor holds one dispatcher, and so one
+  * connection pool, per factory value, which every slice of the job shares
+  * across triggers (like the per-pipeline channel pool in the reference). */
 final case class SocketDispatcherFactory(host: String, port: Int, rpcTimeoutMs: Long)
     extends DispatcherFactory {
   def create(): Dispatcher = new SocketDispatcher(host, port, rpcTimeoutMs)
@@ -311,9 +311,9 @@ final class PipelinedSocketDispatcher(
   }
 }
 
-/** Serializable factory for the pipelined dispatcher: one per executor
-  * task, like [[SocketDispatcherFactory]], but each dispatcher multiplexes
-  * its task's whole dispatch pool over `connections` sockets. */
+/** Serializable factory for the pipelined dispatcher: one per executor,
+  * like [[SocketDispatcherFactory]], but each dispatcher multiplexes every
+  * slice's dispatches over `connections` sockets. */
 final case class PipelinedSocketDispatcherFactory(
     host: String, port: Int, rpcTimeoutMs: Long, connections: Int = 4)
     extends DispatcherFactory {
