@@ -48,10 +48,8 @@ object AutoScaler {
 
   final case class WinSample(tsMs: Long, scale: Double)
 
-  /** Complete per-group autoscaler state — phase is a String (not the
-    * sealed trait) so the SAME case class is the `flatMapGroupsWithState`
-    * state of the live form (streaming/ScaleStream) with a plain product
-    * encoder. The window is bounded: samples older than
+  /** Complete per-group autoscaler state; `phase` is the string form of
+    * [[Phase]] (see `phaseOf`). The window is bounded: samples older than
     * max(downWindowMs, hibernateMs) are evicted on every step, so state
     * size is horizon/cadence regardless of stream length. */
   final case class StepState(
@@ -72,9 +70,8 @@ object AutoScaler {
   }
 
   /** The pure state transition: one throughput sample in, next state out.
-    * Both the driver-loop AutoScaler and the streaming ScaleStream run
-    * exactly this function, so the two forms are decision-for-decision
-    * identical on the same sample sequence (ControlPlaneSpec asserts it). */
+    * The driver-loop AutoScaler below folds each group's samples through
+    * it; ControlPlaneSpec drives it directly to check the window bound. */
   def step(prevOpt: Option[StepState], msgsPerSec: Double, bytesPerSec: Double,
            nowMs: Long, config: Config): StepState = {
     val sc = scaleOf(msgsPerSec, bytesPerSec)
@@ -143,8 +140,7 @@ final class AutoScaler(config: AutoScaler.Config = AutoScaler.Config()) {
     .map(s => GroupState(phaseOf(s.phase), s.scale, s.lastNonZeroTsMs, s.firstSampleTsMs))
 
   /** Feed one throughput sample for a job group; returns the current scale
-    * decision. Delegates to the pure [[AutoScaler.step]] — the same
-    * transition the streaming form runs. */
+    * decision. Delegates to the pure [[AutoScaler.step]]. */
   def onSample(group: String, msgsPerSec: Double, bytesPerSec: Double, nowMs: Long): Double = {
     val next = step(states.get(group), msgsPerSec, bytesPerSec, nowMs, config)
     states(group) = next

@@ -139,13 +139,4 @@ object KafkaSourceConfig {
   def maxOffsetsPerTrigger(fc: FlowControl, triggerSec: Double): Option[Long] =
     if (fc.messagesPerSec >= Double.MaxValue) None
     else Some(math.max(1L, (fc.messagesPerSec * triggerSec).toLong))
-
-  /** Visibility-delay gate for retry tiers: a record fetched from a tier
-    * topic may only be processed once now >= record_ts + tier delay
-    * (reference: KafkaDelayProcessManager.shouldDelayProcess:53-61).
-    * Spark-side: `filter(delayGateSql)` per micro-batch; held-back records
-    * are picked up by the next trigger (AvailableNow/ProcessingTime cadence
-    * = the reference's pause/resume loop without blocking the poll). */
-  def delayGateSql(delayMs: Long, nowMs: Long): String =
-    s"(timestampNs DIV 1000000) + $delayMs <= $nowMs"
 }

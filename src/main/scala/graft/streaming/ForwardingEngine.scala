@@ -371,34 +371,6 @@ object ForwardingEngine {
   }
 
   /**
-   * Visibility-delay gate for retry-tier consumption: a record fetched from
-   * tier topic T may only be processed once
-   * `now >= record_timestamp + T.processingDelayMs`; younger records are
-   * filtered out of this trigger and picked up by a later one (the
-   * trigger-cadence equivalent of the reference's partition pause/resume —
-   * reference: KafkaDelayProcessManager.shouldDelayProcess:53-61).
-   * Non-tier topics pass through untouched — including records whose
-   * timestamps sit ahead of `nowMs` from producer clock skew.
-   *
-   * Apply PER MICRO-BATCH (inside foreachBatch, with the trigger's wall
-   * time): `nowMs` is a plan-time constant, so composing this over a
-   * streaming Dataset once before `writeStream` would freeze "now" at
-   * stream start and hold tier records back forever.
-   */
-  def delayGate(records: Dataset[KafkaRecord], spec: JobSpec, nowMs: Long): Dataset[KafkaRecord] = {
-    val tiers = spec.sortedTiers
-    if (tiers.isEmpty) return records
-    val delayByTopic = tiers.map(t => t.topic -> t.processingDelayMs).toMap
-    val isTier = delayByTopic.keys
-      .map(t => col("topic") === t)
-      .reduce(_ || _)
-    val delayCol = delayByTopic.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("topic") === t, lit(d)).otherwise(acc)
-    }
-    records.filter(!isTier || expr("timestampNs DIV 1000000") + delayCol <= nowMs)
-  }
-
-  /**
    * Streaming throughput tracker: per-topic msgs/sec + bytes/sec over
    * 1-minute event-time windows (the ThroughputTracker analog; reference:
    * uforwarder-core/.../fetchers/kafka/ThroughputTracker.java:11,50-75).

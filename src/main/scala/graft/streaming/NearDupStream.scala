@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.SimilarityOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /**
  * Streaming incremental NEAR-dup dedup — the live twin of the q161 batch
@@ -37,13 +37,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *        bucket) carries `overflow = true`: an over-cap bucket can no
  *        longer flag dups against its unretained members, so the contract
  *        break is SURFACED at runtime instead of silently degrading;
- *      - state is evicted by EVENT-TIME TIMEOUT once the watermark passes
- *        a bucket's horizon. The horizon is MONOTONE — max(previous
+ *      - state is evicted by an EVENT-TIME TIMER once the watermark
+ *        passes a bucket's horizon. The horizon is MONOTONE — max(previous
  *        horizon, batch max ts + delayMs) — so an out-of-order (but
  *        within-watermark) arrival can extend a bucket's retention but
  *        never shorten a horizon an earlier batch established. State is
  *        bounded by (bucket arrival rate × watermark horizon) ×
- *        MaxBucketSize, regardless of stream length.
+ *        MaxBucketSize, regardless of stream length (StateSoakSpec).
+ *      The op is a `transformWithState` processor: one ValueState and ONE
+ *      timer per bucket, at its horizon. When the horizon moves the old
+ *      timer is deleted — a batch runs its input rows before its expired
+ *      timers, so a stale timer would wipe the state that the same batch
+ *      just extended. Requires the RocksDB state store provider.
  *  4. Jaccard verify of the snapshot candidates IN THE MICRO-BATCH
  *     ([[resolve]], called from foreachBatch): the arrival's shingles ride
  *     the operator output; the old side equi-joins the snapshot shingle
@@ -95,9 +100,10 @@ object NearDupStream {
       shingles: Seq[String], old_cands: Seq[Long])
 
   /** A prior arrival held in bucket state: id + its verified shingle set.
-    * `horizonMs` is the monotone eviction horizon; `overflowed` latches
-    * once the bucket hit MaxBucketSize (members lost ⇒ within-bucket dup
-    * flags are best-effort from then on). */
+    * `horizonMs` is the monotone eviction horizon and the time of the
+    * bucket's one event-time timer; `overflowed` latches once the bucket
+    * hit MaxBucketSize (members lost ⇒ within-bucket dup flags are
+    * best-effort from then on). */
   final case class BucketMember(docId: Long, shingles: Seq[String])
   final case class BucketState(
       members: List[BucketMember], horizonMs: Long, overflowed: Boolean)
@@ -226,13 +232,14 @@ object NearDupStream {
   /** Stages 1–3: enrich arrivals (`doc_id`, `text`, event time), band them,
     * attach snapshot candidates via `probe`, and run the keyed stateful op.
     * `delayMs` is both the watermark delay and the bucket-state eviction
-    * horizon. */
+    * horizon. `df` must be streaming: the event-time timers need its
+    * watermark (q161 is the batch form). */
   def bandVerdicts(df: DataFrame, probe: SnapshotProbe,
                    eventTimeCol: String, delayMs: Long): Dataset[BandVerdict] = {
+    require(df.isStreaming, "bandVerdicts needs a streaming DataFrame; q161 is the batch form")
     val spark = df.sparkSession
     import spark.implicits._
-    val base = if (df.isStreaming) df.withWatermark(eventTimeCol, s"$delayMs milliseconds") else df
-    val bands = enriched(base, eventTimeCol)
+    val bands = enriched(df.withWatermark(eventTimeCol, s"$delayMs milliseconds"), eventTimeCol)
     // both probe forms attach the SAME old_cands column (empty when the
     // bucket is absent) via the SAME left equi-join on (band, band_sig) —
     // the q161 batch probe shape — differing only in the broadcast hint:
@@ -255,45 +262,61 @@ object NearDupStream {
         col("shingles"), col("old_cands"))
       .as[BandRow]
       .groupByKey(r => (r.band, r.band_sig))
-      .flatMapGroupsWithState[BucketState, BandVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process(delayMs))
+      .transformWithState(new BucketProcessor(delayMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Back-compat form: a pre-collected driver table IS the broadcast probe. */
-  def bandVerdicts(df: DataFrame, snapshot: Map[(Int, String), Seq[Long]],
-                   eventTimeCol: String, delayMs: Long): Dataset[BandVerdict] =
-    bandVerdicts(df, BroadcastProbe(snapshot), eventTimeCol, delayMs)
+  final class BucketProcessor(delayMs: Long)
+      extends StatefulProcessor[(Int, String), BandRow, BandVerdict] {
 
-  private def process(delayMs: Long)(
-      key: (Int, String), rows: Iterator[BandRow],
-      state: GroupState[BucketState]): Iterator[BandVerdict] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    // within one micro-batch the bucket processes in doc_id order (batch-
-    // internal determinism regardless of shuffle order); across batches the
-    // contract is first-arrival-wins (scaladoc above)
-    val sorted = rows.toIndexedSeq.sortBy(_.doc_id)
-    val prior = state.getOption.getOrElse(
-      BucketState(Nil, Long.MinValue, overflowed = false))
-    var members = prior.members
-    var overflowed = prior.overflowed
-    val out = sorted.map { r =>
-      val sh = r.shingles.toSet
-      // TRUE Jaccard vs prior bucket mates — q161's integer gate
-      val hasPrior = members.exists { m =>
-        val inter = m.shingles.count(sh.contains)
-        inter * 2 >= m.shingles.size + sh.size - inter
+    @transient private var bucket: ValueState[BucketState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      bucket = getHandle.getValueState[BucketState](
+        "bucket", Encoders.product[BucketState], TTLConfig.NONE)
+
+    override def handleInputRows(
+        key: (Int, String),
+        rows: Iterator[BandRow],
+        timerValues: TimerValues): Iterator[BandVerdict] = {
+      // within one micro-batch the bucket processes in doc_id order (batch-
+      // internal determinism regardless of shuffle order); across batches
+      // the contract is first-arrival-wins (scaladoc above)
+      val sorted = rows.toIndexedSeq.sortBy(_.doc_id)
+      val prior = Option.when(bucket.exists())(bucket.get())
+      var members = prior.fold(List.empty[BucketMember])(_.members)
+      var overflowed = prior.exists(_.overflowed)
+      val out = sorted.map { r =>
+        val sh = r.shingles.toSet
+        // TRUE Jaccard vs prior bucket mates — q161's integer gate
+        val hasPrior = members.exists { m =>
+          val inter = m.shingles.count(sh.contains)
+          inter * 2 >= m.shingles.size + sh.size - inter
+        }
+        if (members.size < SimilarityOps.MaxBucketSize)
+          members = BucketMember(r.doc_id, r.shingles) :: members
+        else overflowed = true // member lost: within-bucket flags degrade — say so
+        BandVerdict(r.doc_id, r.ts, hasPrior, r.old_cands, r.shingles, overflowed)
       }
-      if (members.size < SimilarityOps.MaxBucketSize)
-        members = BucketMember(r.doc_id, r.shingles) :: members
-      else overflowed = true // member lost: within-bucket flags degrade — say so
-      BandVerdict(r.doc_id, r.ts, hasPrior, r.old_cands, r.shingles, overflowed)
+      // MONOTONE eviction horizon: a late (within-watermark) batch may
+      // extend retention but never pull an established horizon earlier
+      val horizon = math.max(prior.fold(Long.MinValue)(_.horizonMs),
+        sorted.map(_.ts.getTime).max + delayMs)
+      if (!prior.exists(_.horizonMs == horizon)) {
+        // one timer per bucket: move it to the new horizon
+        prior.foreach(p => getHandle.deleteTimer(p.horizonMs))
+        getHandle.registerTimer(horizon)
+      }
+      bucket.update(BucketState(members, horizon, overflowed))
+      out.iterator
     }
-    // MONOTONE eviction horizon: a late (within-watermark) batch may extend
-    // retention but never pull an established horizon earlier
-    val horizon = math.max(prior.horizonMs, sorted.map(_.ts.getTime).max + delayMs)
-    state.update(BucketState(members, horizon, overflowed))
-    state.setTimeoutTimestamp(horizon)
-    out.iterator
+
+    override def handleExpiredTimer(
+        key: (Int, String),
+        timerValues: TimerValues,
+        expired: ExpiredTimerInfo): Iterator[BandVerdict] = {
+      bucket.clear()
+      Iterator.empty
+    }
   }
 
   /** Stage 4, inside foreachBatch: verify the micro-batch's snapshot

@@ -148,6 +148,81 @@ class ControlPlaneSpec extends AnyFunSuite {
     assert(as.desiredWorkers("g") >= 1)
   }
 
+  // ---- AutoScaler driver loop over a sample sequence ----
+
+  private case class Sample(group: String, tsMs: Long,
+                            msgsPerSec: Double, bytesPerSec: Double)
+
+  // compressed clock: calibrate 10 s, up-window 10 s, down-window 60 s,
+  // hibernate 120 s — the full lifecycle fits in a few hundred samples
+  private val cfg = AutoScaler.Config(
+    calibrateMs = 10000L, upWindowMs = 10000L,
+    downWindowMs = 60000L, hibernateMs = 120000L)
+
+  private val t0 = 1700000000000L
+
+  /** Two groups: "hot" ramps 2→16 workers then idles into hibernation and
+    * wakes; "steady" holds 1 worker throughout. */
+  private def samples: Seq[Sample] = {
+    val hot = (0 until 90).map { i =>
+      val msgs =
+        if (i < 20) 8000.0 // calibration plateau
+        else if (i < 40) 8000.0 * (1 << ((i - 20) / 10)) // ramp
+        else if (i < 50) 64000.0
+        else 0.0 // idle → hibernate at t0+50s+120s... (past horizon)
+      Sample("hot", t0 + i * 5000L, msgs, 0.0)
+    }
+    val steady = (0 until 90).map(i => Sample("steady", t0 + i * 5000L, 3000.0, 0.0))
+    // a wake-up burst long after hibernation begins
+    val wake = Seq(Sample("hot", t0 + 250 * 5000L, 12000.0, 0.0))
+    hot ++ steady ++ wake
+  }
+
+  test("lifecycle: calibrate -> running -> up-scale -> hibernate -> wake") {
+    val driver = new AutoScaler(cfg)
+    samples.sortBy(_.tsMs).filter(_.group == "hot")
+      .foreach(s => driver.onSample("hot", s.msgsPerSec, s.bytesPerSec, s.tsMs))
+    // final sample was the wake burst
+    assert(driver.state("hot").get.phase == AutoScaler.Phase.Calibrating)
+    assert(driver.desiredWorkers("hot") == 3) // 12000/4000
+
+    // replay without the wake: must be hibernating at zero workers
+    val d2 = new AutoScaler(cfg)
+    samples.sortBy(_.tsMs).filter(s => s.group == "hot" && s.tsMs < t0 + 200 * 5000L)
+      .foreach(s => d2.onSample("hot", s.msgsPerSec, s.bytesPerSec, s.tsMs))
+    assert(d2.state("hot").get.phase == AutoScaler.Phase.Hibernating)
+    assert(d2.state("hot").get.scale == 0.0)
+  }
+
+  test("up-scale is percentile-gated and factor-bounded") {
+    val driver = new AutoScaler(cfg)
+    // calibrate at scale 2 (8000 msgs/s)
+    (0 to 3).foreach(i => driver.onSample("g", 8000.0, 0.0, t0 + i * 5000L))
+    assert(driver.state("g").get.phase == AutoScaler.Phase.Running)
+    assert(driver.state("g").get.scale == 2.0)
+    // a single 10x spike cannot exceed maxUpFactor x current
+    driver.onSample("g", 80000.0, 0.0, t0 + 20000L)
+    assert(driver.state("g").get.scale <= 2.0 * cfg.maxUpFactor)
+    // sustained demand keeps climbing, each move bounded
+    var prev = driver.state("g").get.scale
+    (5 to 10).foreach { i =>
+      driver.onSample("g", 80000.0, 0.0, t0 + i * 5000L)
+      val cur = driver.state("g").get.scale
+      assert(cur <= prev * cfg.maxUpFactor + 1e-9)
+      prev = cur
+    }
+    assert(prev == 20.0) // converged to true demand
+  }
+
+  test("state window is bounded by the retention horizon") {
+    var st: Option[AutoScaler.StepState] = None
+    (0 until 10000).foreach { i =>
+      st = Some(AutoScaler.step(st, 4000.0, 0.0, t0 + i * 5000L, cfg))
+    }
+    // horizon = max(downWindow, hibernate) = 120 s at 5 s cadence -> <= 25
+    assert(st.get.window.size <= (cfg.hibernateMs / 5000L).toInt + 1)
+  }
+
   // ---- Rebalancer ----
 
   test("placement is deterministic and covers all jobs") {
@@ -242,13 +317,6 @@ class ControlPlaneSpec extends AnyFunSuite {
     val (p3, m3) = Rebalancer.balanceLoad(two, _ => 100.0, Seq("w1", "w2"))
     assert(m3.size == 1 && p3.jobsOf("w2").size == 1,
       s"empty worker should take one job: $m3")
-  }
-
-  // ---- delay gate ----
-
-  test("delay gate SQL holds back young records") {
-    assert(KafkaSourceConfig.delayGateSql(1000L, 5000L) ==
-      "(timestampNs DIV 1000000) + 1000 <= 5000")
   }
 
   // ---- production session conf ----

@@ -293,25 +293,6 @@ class ForwardingEngineSpec extends AnyFunSuite {
     assert(outcomes.map(_.commitWatermark).max == 8L)
   }
 
-  // === delay gate: retry-tier records gain visibility only after the
-  // tier's processing delay has elapsed ===
-  test("delay gate holds back young retry-tier records, passes main topic") {
-    val spec = specWithTiers(2) // tier1 delay 1000ms, tier2 delay 2000ms
-    val nowMs = 1700000000000L
-    def rec(t: String, ageMs: Long, off: Long) =
-      KafkaRecord(null, "x".getBytes, t, 0, off, (nowMs - ageMs) * 1000000L, Map.empty)
-    val tier1 = TopicNames.retry(topic, group, 1)
-    val tier2 = TopicNames.retry(topic, group, 2)
-    val ds = spark.createDataset(Seq(
-      rec(topic, 0, 0L),        // main topic: always visible
-      rec(tier1, 500, 1L),      // tier1, 500ms old < 1000ms delay -> held
-      rec(tier1, 1500, 2L),     // tier1, past delay -> visible
-      rec(tier2, 1500, 3L),     // tier2, 1500ms old < 2000ms delay -> held
-      rec(tier2, 2500, 4L)))    // tier2, past delay -> visible
-    val visible = ForwardingEngine.delayGate(ds, spec, nowMs).collect().map(_.offset).sorted
-    assert(visible.toSeq == Seq(0L, 2L, 4L))
-  }
-
   // === streaming windowed throughput (ThroughputTracker analog) ===
   test("streaming throughput aggregates per-topic 1-minute windows") {
     val minuteNs = 60L * 1000 * 1000 * 1000

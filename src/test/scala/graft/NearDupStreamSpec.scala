@@ -23,6 +23,8 @@ class NearDupStreamSpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -247,7 +249,8 @@ class NearDupStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("neardup_shuf_").toString
     val results = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, String)]]
     val ms = MemoryStream[ArrivalDoc](implicitly[Encoder[ArrivalDoc]], spark.sqlContext)
-    val q = NearDupStream.bandVerdicts(ms.toDF(), table, "ts", 3600000L).writeStream
+    val q = NearDupStream.bandVerdicts(
+        ms.toDF(), NearDupStream.BroadcastProbe(table), "ts", 3600000L).writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[NearDupStream.BandVerdict], id: Long) =>
@@ -330,7 +333,8 @@ class NearDupStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("neardup_evict_").toString
     val results = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, String)]]
     val ms = MemoryStream[ArrivalDoc](implicitly[Encoder[ArrivalDoc]], spark.sqlContext)
-    val q = NearDupStream.bandVerdicts(ms.toDF(), table, "ts", d).writeStream
+    val q = NearDupStream.bandVerdicts(
+        ms.toDF(), NearDupStream.BroadcastProbe(table), "ts", d).writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[NearDupStream.BandVerdict], id: Long) =>
@@ -373,7 +377,8 @@ class NearDupStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("neardup_mono_").toString
     val results = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, String)]]
     val ms = MemoryStream[ArrivalDoc](implicitly[Encoder[ArrivalDoc]], spark.sqlContext)
-    val q = NearDupStream.bandVerdicts(ms.toDF(), table, "ts", d).writeStream
+    val q = NearDupStream.bandVerdicts(
+        ms.toDF(), NearDupStream.BroadcastProbe(table), "ts", d).writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[NearDupStream.BandVerdict], id: Long) =>
@@ -407,6 +412,57 @@ class NearDupStreamSpec extends AnyFunSuite {
       s"got $statuses — a 'kept' doc 5 means the late doc 2 shortened the horizon")
   }
 
+  test("a horizon passing in the batch that extends the bucket keeps its new member") {
+    val emptySnapshot = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val table = NearDupStream.snapshotBandTable(emptySnapshot)
+    val snapSh = NearDupStream.snapshotShingles(emptySnapshot)
+
+    val dup = "the same near duplicate text body, long enough to shingle meaningfully"
+    val d = 60000L
+    val t0 = 1700000000000L
+
+    val ckpt = Files.createTempDirectory("neardup_sameb_").toString
+    val results = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, String)]]
+    val ms = MemoryStream[ArrivalDoc](implicitly[Encoder[ArrivalDoc]], spark.sqlContext)
+    // without no-data batches the watermark a batch advances is first used
+    // by the NEXT data batch, so one batch both expires the bucket's old
+    // horizon and brings it a member — what a busy source does every
+    // trigger, since data keeps the no-data batch from running
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val q = try NearDupStream.bandVerdicts(
+        ms.toDF(), NearDupStream.BroadcastProbe(table), "ts", d).writeStream
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[NearDupStream.BandVerdict], id: Long) =>
+        results(id) = NearDupStream.resolve(ds.toDF(), snapSh).collect()
+          .map(r => r.getLong(0) -> r.getString(2))
+      }
+      .start()
+    finally spark.conf.unset(noData)
+    try {
+      // doc1 sets the bucket's horizon to t+60s
+      ms.addData(Seq(ArrivalDoc(1L, dup, new Timestamp(t0)))); q.processAllAvailable()
+      // a filler moves the watermark to t+120s, past that horizon
+      ms.addData(Seq(ArrivalDoc(2L,
+        "a completely different filler document advancing the watermark only",
+        new Timestamp(t0 + 3 * d))))
+      q.processAllAvailable()
+      // doc3's batch runs at watermark t+120s: the old horizon expires in
+      // the same batch that adds doc3 and moves the horizon to t+182s
+      ms.addData(Seq(ArrivalDoc(3L, dup, new Timestamp(t0 + 2 * d + 2000))))
+      q.processAllAvailable()
+      // the bucket must still hold doc3 → dup_within
+      ms.addData(Seq(ArrivalDoc(4L, dup, new Timestamp(t0 + 2 * d + 3000))))
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val statuses = results.values.flatten.toMap
+    assert(statuses == Map(
+      1L -> "kept", 2L -> "kept", 3L -> "dup_within", 4L -> "dup_within"),
+      s"got $statuses — a 'kept' doc 4 means the expired timer wiped the bucket doc 3 extended")
+  }
+
   test("an over-cap bucket surfaces bucket_overflow on every verdict past the cap") {
     val cap = graft.operators.SimilarityOps.MaxBucketSize
     val emptySnapshot = Seq.empty[(Long, String)].toDF("doc_id", "text")
@@ -420,7 +476,8 @@ class NearDupStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("neardup_ovfl_").toString
     val results = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, String, Boolean)]]
     val ms = MemoryStream[ArrivalDoc](implicitly[Encoder[ArrivalDoc]], spark.sqlContext)
-    val q = NearDupStream.bandVerdicts(ms.toDF(), table, "ts", 3600000L).writeStream
+    val q = NearDupStream.bandVerdicts(
+        ms.toDF(), NearDupStream.BroadcastProbe(table), "ts", 3600000L).writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[NearDupStream.BandVerdict], id: Long) =>

@@ -14,6 +14,8 @@ class SessionizeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -21,8 +23,8 @@ class SessionizeSpec extends AnyFunSuite {
 
   private val Gap = 30L * 60 * 1000 // 30 min
 
-  /** With ProcessingTimeTimeout registered, the query keeps triggering
-    * empty micro-batches to check timers, so processAllAvailable never
+  /** In processing-time mode the query keeps triggering empty
+    * micro-batches to check timers, so processAllAvailable never
     * quiesces — poll the sink for the expected row count instead. */
   private def awaitRows(table: String, n: Long, timeoutMs: Long = 120000): Unit = {
     val deadline = System.currentTimeMillis + timeoutMs

@@ -6,9 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source-tree guards that keep two consolidations from being undone: every
-  * local Spark session comes from `GraftConf.local`, and the cross-batch ack
-  * tracker is one operator, `AckStateTws`. Runs from the project root. */
+/** Source-tree guards that keep three consolidations from being undone:
+  * every local Spark session comes from `GraftConf.local`, the cross-batch
+  * ack tracker is one operator, `AckStateTws`, and every keyed-state
+  * operator is a `transformWithState` processor. Runs from the project
+  * root. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def files(root: String): Seq[Path] = {
@@ -35,5 +37,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val offenders = containing(files("src"), retired)
     assert(offenders.isEmpty,
       s"AckStateTws is the one cross-batch ack operator; $retired is named in ${offenders.mkString(", ")}")
+  }
+
+  test("no flatMapGroupsWithState or mapGroupsWithState under src/main") {
+    val offenders = containing(files("src/main"), "Groups" + "WithState")
+    assert(offenders.isEmpty,
+      s"keyed state is a transformWithState StatefulProcessor; found in ${offenders.mkString(", ")}")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{AckStateTws, DelayGateTws, PackStream}
+import graft.streaming.{AckStateTws, NearDupStream, PackStream}
 import graft.streaming.AckStateTws.AckEvent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -8,10 +8,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Long-run state soak for the transformWithState operators: the claimed
-  * state bounds — AckStateTws O(in-flight), DelayGateTws O(outstanding
-  * buckets), PackStream O(sources) — are asserted NUMERICALLY from
-  * `StreamingQueryProgress.stateOperators` over ~10^5 events and dozens
-  * of triggers, not just structurally. A state leak (purge that stops
+  * state bounds — AckStateTws O(in-flight), NearDupStream O(buckets inside
+  * the eviction horizon), PackStream O(sources) — are asserted NUMERICALLY
+  * from `StreamingQueryProgress.stateOperators` over thousands to 10^5
+  * events and dozens of triggers, not just structurally. A state leak (purge that stops
   * purging, buckets that never release) grows with event count and
   * crosses these bounds within a few triggers. */
 class StateSoakSpec extends AnyFunSuite {
@@ -80,47 +80,50 @@ class StateSoakSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("DelayGateTws state tracks outstanding due-buckets, not arrivals (50k records)") {
-    val perTrigger = 500
-    val triggers = 100 // 50k records
-    val delayMs = 5000L
-    val input = MemoryStream[DelayGateTws.DelayedRecord](
-      implicitly[org.apache.spark.sql.Encoder[DelayGateTws.DelayedRecord]], spark.sqlContext)
-    val q = DelayGateTws.gate(input.toDS(), delayMs)
-      .writeStream.outputMode("append").format("memory").queryName("soak_gate").start()
+  test("NearDupStream bucket state tracks the eviction horizon, not arrivals (1k docs)") {
+    val perTrigger = 100
+    val triggers = 10 // 1,000 docs x 4 bands = 4,000 bucket entries
+    val delayMs = 1000L // watermark delay = eviction horizon
+    val bands = graft.operators.SimilarityOps.NumHashes / graft.operators.SimilarityOps.BandSize
+    val table = Map.empty[(Int, String), Seq[Long]]
+    val input = MemoryStream[ArrivalDoc](
+      implicitly[org.apache.spark.sql.Encoder[ArrivalDoc]], spark.sqlContext)
+    val q = NearDupStream.bandVerdicts(input.toDF(), NearDupStream.BroadcastProbe(table), "ts", delayMs)
+      .writeStream.outputMode("append").format("memory").queryName("soak_neardup").start()
+    // every doc is its own text, so each of its bands opens a fresh bucket
+    val rnd = new scala.util.Random(20261019L)
+    def text(): String = Seq.fill(12)(rnd.alphanumeric.take(6).mkString).mkString(" ")
+    val t0 = 1700000000000L
     try {
-      // trigger i sits at "now" = i seconds; its records quantize to 10
-      // distinct due instants. The watermark trails one trigger, so ~6-7
-      // seconds x 10 buckets are outstanding at any time — while 50k
-      // records flow through.
-      var off = 0L
+      // trigger i sits at event time t0 + i s: a bucket lives for the 1 s
+      // horizon plus the 1 s watermark lag, so about 3 triggers of buckets
+      // are open at any time while 10 triggers of arrivals flow through
+      var id = 0L
       val batches = (0 until triggers).iterator.map { i =>
-        (0 until perTrigger).map { j =>
-          off += 1
-          // event times start ONE second above zero: the engine's late
-          // filter drops rows at/below the watermark, and the initial
-          // watermark is 0 — eventTime = 0 in the first trigger would be
-          // discarded at the boundary before reaching the gate
-          DelayGateTws.DelayedRecord("t", 0, off, (i + 1).toLong * 1000L + (j % 10))
+        (0 until perTrigger).map { _ =>
+          id += 1
+          ArrivalDoc(id, text(), new java.sql.Timestamp(t0 + i * 1000L))
         }
       }
       val samples = soak(input, q, batches)
-      // bound: (delay/1000 + watermark lag + 2) seconds x 10 buckets, plus
-      // one timer row per bucket; arrivals (50k) must not appear
-      val bound = 10L * (delayMs / 1000L + 4L) * 2L
+      // bound: (horizon + watermark lag + 2) seconds of buckets, one value
+      // row each (timers are not counted); the 4,000 entries must not appear
+      val bound = bands.toLong * perTrigger * (2L * delayMs / 1000L + 2L)
+      val unevicted = bands.toLong * perTrigger * triggers
+      assert(bound * 2 <= unevicted, "the soak is too short to tell the bounds apart")
       assert(samples.max <= bound,
-        s"gate state grew past bucket bound: max=${samples.max} bound=$bound samples=${samples.take(20)}")
-      // release check: push the watermark far past every due instant → all
-      // buffered records release; only the flush record's own bucket stays
-      input.addData(Seq(DelayGateTws.DelayedRecord("t", 0, off + 1, 10000000L)))
-      q.processAllAvailable()
-      input.addData(Seq(DelayGateTws.DelayedRecord("t", 0, off + 2, 10001000L)))
-      q.processAllAvailable()
-      val released = spark.sql("SELECT COUNT(*) FROM soak_gate").head().getLong(0)
-      assert(released >= perTrigger.toLong * triggers - 1,
-        s"records lost in the gate: released=$released of ${perTrigger * triggers}")
+        s"bucket state grew past the horizon bound: max=${samples.max} bound=$bound samples=${samples.take(20)}")
+      // drain: a far-future filler pushes the watermark past every horizon
+      // → every earlier bucket is evicted; only the fillers' own remain
+      Seq(10000000L, 10001000L).foreach { dt =>
+        id += 1
+        input.addData(Seq(ArrivalDoc(id, text(), new java.sql.Timestamp(t0 + dt))))
+        q.processAllAvailable()
+      }
       val drained = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(drained <= 8L, s"released buckets not deleted: $drained rows remain")
+      assert(drained <= 2L * bands, s"expired buckets not evicted: $drained rows remain")
+      val n = spark.sql("SELECT COUNT(*) FROM soak_neardup").head().getLong(0)
+      assert(n == bands.toLong * (perTrigger * triggers + 2))
     } finally q.stop()
   }
 
