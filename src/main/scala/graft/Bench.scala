@@ -539,28 +539,25 @@ object Bench {
     val fwdRate = if (q50Sec > 0) eventsRows / q50Sec else 0.0
     val fwdBytes = if (q50Sec > 0) eventsBytes / q50Sec else 0.0
 
-    // Wire-dispatch legs: the SAME engine batch path as q50, but every
+    // Wire-dispatch leg: the SAME engine batch path as q50, but every
     // dispatch crosses a real loopback TCP connection through a pooled
-    // dispatcher with per-message deadlines. The reference's 4,000 msgs/s
-    // scale unit is defined against real gRPC I/O, so these are the honest
-    // baseline comparisons; the in-process forward rate above isolates
-    // pure engine cost. One protocol per call:
-    //  - socket: length-prefixed frames (wire I/O floor)
-    //  - http2:  full RFC 9113 exchange (preface, HEADERS+DATA out,
-    //    HEADERS/DATA/TRAILERS back, grpc-status from the trailers) — the
-    //    reference's actual wire format minus TLS and HPACK dynamic
-    //    tables; the delta vs socket isolates the framing cost.
-    // Both protocols measured as 5 INTERLEAVED reps (S,H,S,H,…) with min
-    // and median reported — the same rep structure as the stream legs, for
-    // the same reason: the r9 official socket figure swung −26% vs the
-    // local run on a single-shot measurement while per-query times were
-    // flat; single TCP passes on a shared host carry scheduler noise the
-    // minimum cancels, and adjacent reps share a load regime so the
-    // socket↔http2 delta (the framing cost) stays an apples comparison.
-    class WireLeg(
-        name: String,
-        mkServer: (graft.streaming.DispatchRequest => graft.streaming.DispatchResult) => (Int, () => Unit),
-        mkFactory: Int => graft.streaming.DispatcherFactory) {
+    // HTTP/2 dispatcher with per-message deadlines. The reference's 4,000
+    // msgs/s scale unit is defined against real gRPC I/O, so this is the
+    // honest baseline comparison; the in-process forward rate above
+    // isolates pure engine cost, and the two together give the wire cost.
+    // The protocol is the full RFC 9113 exchange (preface, HEADERS+DATA
+    // out, HEADERS/DATA/TRAILERS back, grpc-status from the trailers) —
+    // the reference's actual wire format minus TLS and HPACK dynamic
+    // tables. Measured as 5 reps with min and median reported — the same
+    // rep structure as the stream legs, for the same reason: the r9
+    // official wire figure swung −26% vs the local run on a single-shot
+    // measurement while per-query times were flat; single TCP passes on a
+    // shared host carry scheduler noise the minimum cancels. The client is
+    // the MULTIPLEXED dispatcher: concurrent streams per connection
+    // demultiplexed by stream id, RFC 9113's concurrency and the
+    // reference's 250-streams/channel shape (r13's single-stream h2 ran
+    // ~0.6x the multiplexed form).
+    class WireLeg(name: String) {
       private var closeServer: () => Unit = () => ()
       private var run: () => Double = () => 0.0
       val reps = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -568,10 +565,11 @@ object Bench {
       val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
       def open(): Unit =
         try {
-          val (port, closer) = mkServer(_ =>
+          val srv = new graft.streaming.Http2ConsumerServer(_ =>
             graft.streaming.DispatchResult(graft.model.GrpcStatus.OK, None, overdue = false))
-          closeServer = closer
-          val factory = mkFactory(port)
+          closeServer = () => srv.close()
+          val factory = graft.streaming.MultiplexedHttp2DispatcherFactory(
+            "127.0.0.1", srv.port, rpcTimeoutMs = 30000)
           val spec = graft.operators.PipelineOps.pipelineSpec("events")
           val recs = graft.operators.PipelineOps.eventRecords(spark, sfDir)
           def once(ds: org.apache.spark.sql.Dataset[graft.streaming.ForwardingEngine.KafkaRecord]): Double = {
@@ -601,50 +599,29 @@ object Bench {
         if (ok.isEmpty) 0.0 else ok(ok.size / 2)
       }
     }
-    // Three wire forms, interleaved (sync, pipelined, h2 per round). The
-    // r14 A/B (docs/BENCH_NOTES_r14.md) adopted the PIPELINED socket form
-    // as the official socket leg (engine path at sf0.1: 54.8k vs sync
-    // 49.0k — the reference never does one blocking round trip per
-    // record; the byte legs adopted this form in r12) and the MULTIPLEXED
-    // HTTP/2 dispatcher as the h2 leg (59.0k — concurrent streams per
-    // connection demultiplexed by stream id, RFC 9113's concurrency and
-    // the reference's 250-streams/channel shape; r13's single-stream h2
-    // ran ~0.6x the socket leg). The sync socket form stays as the
-    // A-side of the A/B for round-over-round comparability.
-    val socketSyncLeg = new WireLeg("socket-sync-forward",
-      h => { val s = new graft.streaming.SocketConsumerServer(h); (s.port, () => s.close()) },
-      p => graft.streaming.SocketDispatcherFactory("127.0.0.1", p, rpcTimeoutMs = 30000))
-    val socketLeg = new WireLeg("socket-forward",
-      h => { val s = new graft.streaming.SocketConsumerServer(h); (s.port, () => s.close()) },
-      p => graft.streaming.PipelinedSocketDispatcherFactory("127.0.0.1", p, rpcTimeoutMs = 30000))
-    val h2Leg = new WireLeg("http2-forward",
-      h => { val s = new graft.streaming.Http2ConsumerServer(h); (s.port, () => s.close()) },
-      p => graft.streaming.MultiplexedHttp2DispatcherFactory("127.0.0.1", p, rpcTimeoutMs = 30000))
+    val h2Leg = new WireLeg("http2-forward")
     if (!legsOnly && onlyQuery.isEmpty) {
-      socketSyncLeg.open(); socketLeg.open(); h2Leg.open()
+      h2Leg.open()
       (1 to 5).foreach { _ =>
-        coolDown(); socketSyncLeg.rep(); socketSyncLeg.probes += probeOnce()
-        coolDown(); socketLeg.rep(); socketLeg.probes += probeOnce()
         coolDown(); h2Leg.rep(); h2Leg.probes += probeOnce()
       }
-      socketSyncLeg.close(); socketLeg.close(); h2Leg.close()
+      h2Leg.close()
     }
-    val socketFwdRate: Double = socketLeg.best
-    val socketSyncFwdRate: Double = socketSyncLeg.best
     val h2FwdRate: Double = h2Leg.best
 
     // Payload-size-swept BYTES legs: BASELINE.md's second scale unit is
     // 16 MiB/s per worker (reference AutoScalarConfiguration.java:22), but
     // the events table's props average ~9 bytes/record, so the legs above
     // measure the bytes target at ~0.05% duty — vacuously. These legs push
-    // the SAME engine batch path through the PIPELINED socket dispatcher
-    // (many in-flight frames per connection — the reference's
-    // concurrent-streams model, application-uforwarder-worker.yaml:77) with
-    // synthetic 1 KiB and 16 KiB values and report WIRE BYTES/SEC directly
+    // the SAME engine batch path through the multiplexed HTTP/2 dispatcher
+    // at its default 4 connections, like the leg above (many in-flight
+    // streams per connection — the reference's concurrent-streams model,
+    // application-uforwarder-worker.yaml:77), with synthetic 1 KiB and
+    // 16 KiB values, and report WIRE BYTES/SEC directly
     // against the 16 MiB/s target. Record counts are sized so one rep is
     // ~130-165 MB of wire traffic: r12's 40k-record 1 KiB leg was ~60%
     // per-rep FIXED cost (stream/stage setup, 32 task launches, dials) and
-    // under-read the steady-state rate ~4x — the WireProbe decomposition
+    // under-read the steady-state rate ~4x — r13's per-rep decomposition
     // (docs/BENCH_NOTES_r13.md) pinned the engine's marginal rate at 1 KiB
     // near 440 MB/s. The padded input is cached and counted before the
     // timer so scan/pad cost is not billed to the wire; reps interleave
@@ -657,10 +634,10 @@ object Bench {
       private var run: () => Double = () => 0.0
       def open(): Unit =
         try {
-          val srv = new graft.streaming.SocketConsumerServer(_ =>
+          val srv = new graft.streaming.Http2ConsumerServer(_ =>
             graft.streaming.DispatchResult(graft.model.GrpcStatus.OK, None, overdue = false))
           closeServer = () => srv.close()
-          val factory = graft.streaming.PipelinedSocketDispatcherFactory(
+          val factory = graft.streaming.MultiplexedHttp2DispatcherFactory(
             "127.0.0.1", srv.port, rpcTimeoutMs = 30000)
           val spec = graft.operators.PipelineOps.pipelineSpec("events")
           import spark.implicits._
@@ -790,7 +767,7 @@ object Bench {
     // single-shot tags enter the baseline — the min-of-3 sanity probes
     // read systematically lower than a single shot taken right after a
     // heavy leg (GC/JIT residue), and mixing them in flags healthy reps.
-    val allProbes = (socketSyncLeg.probes ++ socketLeg.probes ++ h2Leg.probes ++
+    val allProbes = (h2Leg.probes ++
       byteLeg1k.probes ++ byteLeg16k.probes ++ streamProbes ++ queueStreamProbes ++
       Seq(susStreamProbePre, susStreamProbePost,
         susQueueProbePre, susQueueProbePost)).filter(_ > 0)
@@ -844,7 +821,7 @@ object Bench {
       sustainJson("sustained_stream", susStreamStats) + "," +
         sustainJson("sustained_queue", susQueueStats) + ","
     val jsonLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qsCompact$qsReps$qsRerunFail,"sf":"$sfDir","forward_msgs_per_sec":${r1(fwdRate)},"forward_bytes_per_sec":${r1(fwdBytes)},"socket_forward_msgs_per_sec":${r1(socketFwdRate)},"socket_forward_msgs_per_sec_median":${r1(socketLeg.median)},"socket_forward_reps":${socketLeg.reps.map(r1).mkString("[", ",", "]")},"socket_forward_probe_sec":${socketLeg.probes.map(r4).mkString("[", ",", "]")},"socket_forward_msgs_per_sec_median_clean":${cleanMedian(socketLeg.reps.toSeq, socketLeg.probes.toSeq)},"socket_forward_form":"pipelined","socket_sync_forward_msgs_per_sec":${r1(socketSyncFwdRate)},"socket_sync_forward_msgs_per_sec_median":${r1(socketSyncLeg.median)},"socket_sync_forward_reps":${socketSyncLeg.reps.map(r1).mkString("[", ",", "]")},"socket_sync_forward_probe_sec":${socketSyncLeg.probes.map(r4).mkString("[", ",", "]")},"socket_sync_forward_msgs_per_sec_median_clean":${cleanMedian(socketSyncLeg.reps.toSeq, socketSyncLeg.probes.toSeq)},"http2_forward_msgs_per_sec":${r1(h2FwdRate)},"http2_forward_msgs_per_sec_median":${r1(h2Leg.median)},"http2_forward_reps":${h2Leg.reps.map(r1).mkString("[", ",", "]")},"http2_forward_probe_sec":${h2Leg.probes.map(r4).mkString("[", ",", "]")},"http2_forward_msgs_per_sec_median_clean":${cleanMedian(h2Leg.reps.toSeq, h2Leg.probes.toSeq)},"wire_bytes_per_sec_1k":${r1(byteLeg1k.best)},"wire_bytes_per_sec_1k_median":${r1(byteLeg1k.median)},"wire_bytes_reps_1k":${byteLeg1k.reps.map(r1).mkString("[", ",", "]")},"wire_bytes_probe_sec_1k":${byteLeg1k.probes.map(r4).mkString("[", ",", "]")},"wire_bytes_per_sec_1k_median_clean":${cleanMedian(byteLeg1k.reps.toSeq, byteLeg1k.probes.toSeq)},"wire_bytes_per_sec_16k":${r1(byteLeg16k.best)},"wire_bytes_per_sec_16k_median":${r1(byteLeg16k.median)},"wire_bytes_reps_16k":${byteLeg16k.reps.map(r1).mkString("[", ",", "]")},"wire_bytes_probe_sec_16k":${byteLeg16k.probes.map(r4).mkString("[", ",", "]")},"wire_bytes_per_sec_16k_median_clean":${cleanMedian(byteLeg16k.reps.toSeq, byteLeg16k.probes.toSeq)},"stream_msgs_per_sec":${r1(streamRate)},"stream_msgs_per_sec_median":${r1(streamMedian)},"stream_msgs_per_sec_min":${r1(streamMin)},"stream_reps":${streamReps.map(r1).mkString("[", ",", "]")},"stream_probe_sec":${streamProbes.map(r4).mkString("[", ",", "]")},"stream_msgs_per_sec_median_clean":${cleanMedian(streamReps, streamProbes)},"queue_stream_msgs_per_sec":${r1(queueStreamRate)},"queue_stream_msgs_per_sec_median":${r1(queueStreamMedian)},"queue_stream_msgs_per_sec_min":${r1(queueStreamMin)},"queue_stream_reps":${queueStreamReps.map(r1).mkString("[", ",", "]")},"queue_stream_probe_sec":${queueStreamProbes.map(r4).mkString("[", ",", "]")},"queue_stream_msgs_per_sec_median_clean":${cleanMedian(queueStreamReps, queueStreamProbes)},"queue_stream_pair_ratios":${pairRatios.map(r4).mkString("[", ",", "]")},"queue_stream_ratio":${r4(queueRatio)},"sustained_sec":$sustainSec,"sustained_stream_msgs_per_sec":${r1(susStream)},"sustained_stream_first_third":${r1(susStreamFirst)},"sustained_stream_last_third":${r1(susStreamLast)},"sustained_queue_msgs_per_sec":${r1(susQueue)},"sustained_queue_first_third":${r1(susQueueFirst)},"sustained_queue_last_third":${r1(susQueueLast)},$sustainTelemetryJson"sustained_stream_probe_pre_sec":${r4(susStreamProbePre)},"sustained_stream_probe_post_sec":${r4(susStreamProbePost)},"sustained_queue_probe_pre_sec":${r4(susQueueProbePre)},"sustained_queue_probe_post_sec":${r4(susQueueProbePost)},"probe_base_sec":${r4(probeBase)},"degraded_factor":$DegradedFactor,"degraded_reps_total":$degradedTotal,"sanity_probe_sec":${r4(sanityStart)},"sanity_probe_end_sec":${r4(sanityEnd)},"code_cache_mb_start":${r1(ccStart)},"code_cache_mb_end":${r1(ccEnd)},"code_cache_mb_max":${r1(ccMax)},"measured_runs":3,"stream_reps_n":${streamReps.size},"n_queries":${results.size},"failed":${results.count(_._3 < 0)}}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qsCompact$qsReps$qsRerunFail,"sf":"$sfDir","forward_msgs_per_sec":${r1(fwdRate)},"forward_bytes_per_sec":${r1(fwdBytes)},"http2_forward_msgs_per_sec":${r1(h2FwdRate)},"http2_forward_msgs_per_sec_median":${r1(h2Leg.median)},"http2_forward_reps":${h2Leg.reps.map(r1).mkString("[", ",", "]")},"http2_forward_probe_sec":${h2Leg.probes.map(r4).mkString("[", ",", "]")},"http2_forward_msgs_per_sec_median_clean":${cleanMedian(h2Leg.reps.toSeq, h2Leg.probes.toSeq)},"wire_bytes_per_sec_1k":${r1(byteLeg1k.best)},"wire_bytes_per_sec_1k_median":${r1(byteLeg1k.median)},"wire_bytes_reps_1k":${byteLeg1k.reps.map(r1).mkString("[", ",", "]")},"wire_bytes_probe_sec_1k":${byteLeg1k.probes.map(r4).mkString("[", ",", "]")},"wire_bytes_per_sec_1k_median_clean":${cleanMedian(byteLeg1k.reps.toSeq, byteLeg1k.probes.toSeq)},"wire_bytes_per_sec_16k":${r1(byteLeg16k.best)},"wire_bytes_per_sec_16k_median":${r1(byteLeg16k.median)},"wire_bytes_reps_16k":${byteLeg16k.reps.map(r1).mkString("[", ",", "]")},"wire_bytes_probe_sec_16k":${byteLeg16k.probes.map(r4).mkString("[", ",", "]")},"wire_bytes_per_sec_16k_median_clean":${cleanMedian(byteLeg16k.reps.toSeq, byteLeg16k.probes.toSeq)},"stream_msgs_per_sec":${r1(streamRate)},"stream_msgs_per_sec_median":${r1(streamMedian)},"stream_msgs_per_sec_min":${r1(streamMin)},"stream_reps":${streamReps.map(r1).mkString("[", ",", "]")},"stream_probe_sec":${streamProbes.map(r4).mkString("[", ",", "]")},"stream_msgs_per_sec_median_clean":${cleanMedian(streamReps, streamProbes)},"queue_stream_msgs_per_sec":${r1(queueStreamRate)},"queue_stream_msgs_per_sec_median":${r1(queueStreamMedian)},"queue_stream_msgs_per_sec_min":${r1(queueStreamMin)},"queue_stream_reps":${queueStreamReps.map(r1).mkString("[", ",", "]")},"queue_stream_probe_sec":${queueStreamProbes.map(r4).mkString("[", ",", "]")},"queue_stream_msgs_per_sec_median_clean":${cleanMedian(queueStreamReps, queueStreamProbes)},"queue_stream_pair_ratios":${pairRatios.map(r4).mkString("[", ",", "]")},"queue_stream_ratio":${r4(queueRatio)},"sustained_sec":$sustainSec,"sustained_stream_msgs_per_sec":${r1(susStream)},"sustained_stream_first_third":${r1(susStreamFirst)},"sustained_stream_last_third":${r1(susStreamLast)},"sustained_queue_msgs_per_sec":${r1(susQueue)},"sustained_queue_first_third":${r1(susQueueFirst)},"sustained_queue_last_third":${r1(susQueueLast)},$sustainTelemetryJson"sustained_stream_probe_pre_sec":${r4(susStreamProbePre)},"sustained_stream_probe_post_sec":${r4(susStreamProbePost)},"sustained_queue_probe_pre_sec":${r4(susQueueProbePre)},"sustained_queue_probe_post_sec":${r4(susQueueProbePost)},"probe_base_sec":${r4(probeBase)},"degraded_factor":$DegradedFactor,"degraded_reps_total":$degradedTotal,"sanity_probe_sec":${r4(sanityStart)},"sanity_probe_end_sec":${r4(sanityEnd)},"code_cache_mb_start":${r1(ccStart)},"code_cache_mb_end":${r1(ccEnd)},"code_cache_mb_max":${r1(ccMax)},"measured_runs":3,"stream_reps_n":${streamReps.size},"n_queries":${results.size},"failed":${results.count(_._3 < 0)}}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_out.json")
     try {
       val p = java.nio.file.Paths.get(outFile)
@@ -855,9 +832,6 @@ object Bench {
     }
     val compactLine = compactRecord(results, outFile, sfDir, Seq(
       "forward_msgs_per_sec" -> r1(fwdRate),
-      "socket_forward_msgs_per_sec" -> r1(socketFwdRate),
-      "socket_forward_msgs_per_sec_median_clean" -> cleanMedian(socketLeg.reps.toSeq, socketLeg.probes.toSeq),
-      "socket_sync_forward_msgs_per_sec" -> r1(socketSyncFwdRate),
       "http2_forward_msgs_per_sec" -> r1(h2FwdRate),
       "http2_forward_msgs_per_sec_median_clean" -> cleanMedian(h2Leg.reps.toSeq, h2Leg.probes.toSeq),
       "wire_bytes_per_sec_1k" -> r1(byteLeg1k.best),
@@ -898,10 +872,6 @@ object Bench {
     }
     if (!legsOnly && onlyQuery.isEmpty && results.nonEmpty && fwdRate <= 0)
       gateErrors += "forward_msgs_per_sec is 0 — q50 engine leg did not run"
-    if (!legsOnly && onlyQuery.isEmpty && results.nonEmpty && socketFwdRate <= 0)
-      gateErrors += "socket_forward_msgs_per_sec is 0 — wire-dispatch leg produced nothing"
-    if (!legsOnly && onlyQuery.isEmpty && results.nonEmpty && socketSyncFwdRate <= 0)
-      gateErrors += "socket_sync_forward_msgs_per_sec is 0 — sync wire leg produced nothing"
     if (!legsOnly && onlyQuery.isEmpty && results.nonEmpty && h2FwdRate <= 0)
       gateErrors += "http2_forward_msgs_per_sec is 0 — HTTP/2 wire leg produced nothing"
     if (streamRate <= 0)

@@ -50,6 +50,12 @@ object KafkaSourceConfig {
    * Flow control maps to maxOffsetsPerTrigger
    * (messages_per_sec × trigger seconds), the Spark-native equivalent of the
    * reference's rate limiters (FlowControl, job.proto:359-366).
+   *
+   * No retry-tier delay: these options hold no young tier record back, so
+   * a job on them fetches a retry-tier record as soon as it is written.
+   * The one tier-delay gate is graft-queue's `visibilitydelays` end-offset
+   * cap (`GraftBroker.visibleEndOffsets`); the Kafka form needs its own
+   * source-side gate before it honours `RetryTier.processingDelayMs`.
    */
   def sourceOptions(
       spec: JobSpec,

@@ -49,10 +49,13 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Scale note: the BROKER is single-JVM by design (tests/dev harness — the
  * production path swaps `format("graft-queue")` for `format("kafka")` with
- * identical engine code); the CONNECTOR code paths are the same planner/
- * executor splits a distributed source uses — offsets planned on the
- * driver, partition readers on executors, one InputPartition per
- * topic-partition.
+ * identical engine code, except that the Kafka form applies NO retry-tier
+ * delay: the one tier-delay gate is this source's `visibilitydelays`
+ * end-offset cap, Spark's Kafka source has no such gate yet, and so a
+ * retry-tier record is fetched as soon as it is written); the CONNECTOR
+ * code paths are the same planner/executor splits a distributed source
+ * uses — offsets planned on the driver, partition readers on executors,
+ * one InputPartition per topic-partition.
  */
 object GraftBroker {
   final case class Rec(

@@ -203,11 +203,11 @@ object Http2 {
  * the response's kafka-action arrives as a TRAILER and feeds
  * `Codes.codeFor`'s action-override path.
  *
- * That stream-id correlation buys a failure-isolation property the framed
- * socket protocol cannot have: a stream whose deadline expires is simply
- * ABANDONED (removed from the pending map; its late response frames are
- * discarded on arrival by the id lookup) — no connection poison, no
- * collateral UNAVAILABLE for in-flight siblings. Only a transport error
+ * That stream-id correlation buys a failure-isolation property that
+ * response-order (FIFO) correlation cannot have: a stream whose deadline
+ * expires is simply ABANDONED (removed from the pending map; its late
+ * response frames are discarded on arrival by the id lookup) — no
+ * connection poison, no collateral UNAVAILABLE for in-flight siblings. Only a transport error
  * (socket death, framing desync) fails the whole connection.
  *
  * Reader liveness vs framing integrity: the reader blocks on the FIRST
@@ -442,9 +442,9 @@ final class MultiplexedHttp2Dispatcher(
         if (!cf.isDone)
           cf.complete(DispatchResult(graft.model.GrpcStatus.UNAVAILABLE, None, overdue = overdueNow))
     }
-    // close the enqueue-vs-poison race (the pipelined dispatcher's rule):
-    // poison sets dead before draining, so dead==false here means our put
-    // is covered by any later drain; dead==true means nobody may drain it
+    // close the enqueue-vs-poison race: poison sets dead before draining,
+    // so dead==false here means our put is covered by any later drain;
+    // dead==true means nobody may drain it
     if (conn.dead && !cf.isDone) {
       if (sid >= 0) conn.abandon(sid)
       cf.complete(DispatchResult(graft.model.GrpcStatus.UNAVAILABLE, None, overdue = overdueNow))
@@ -526,7 +526,7 @@ final class Http2ConsumerServer(handler: DispatchRequest => DispatchResult) {
       // buffered both ways: a response is three frames (HEADERS, DATA,
       // trailers) — unbuffered that is ~8 small write syscalls serialized
       // per connection, which caps a multiplexed client whose streams all
-      // share a few connections (the SocketConsumerServer lesson)
+      // share a few connections
       val in = new DataInputStream(new java.io.BufferedInputStream(sock.getInputStream, 1 << 16))
       val out = new DataOutputStream(new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16))
       val preface = new Array[Byte](Preface.length)

@@ -102,18 +102,3 @@ final class LatencyTracker(val capacity: Int = 1024) {
     s.count > 0 && s.medianNanos > budgetNanos
   }
 }
-
-/**
- * Simple msgs/sec + bytes/sec budget for one micro-batch: given the trigger
- * interval, how many records/bytes may pass. The driver applies this as
- * `maxOffsetsPerTrigger`; this class is the per-batch byte-accounting
- * companion (reference: ProcessorImpl.java:187-188,1348-1388).
- */
-final case class BatchBudget(messagesPerSec: Double, bytesPerSec: Double, triggerSec: Double) {
-  def maxMessages: Long =
-    if (messagesPerSec >= Double.MaxValue) Long.MaxValue
-    else math.max(1L, (messagesPerSec * triggerSec).toLong)
-  def maxBytes: Long =
-    if (bytesPerSec >= Double.MaxValue) Long.MaxValue
-    else math.max(1L, (bytesPerSec * triggerSec).toLong)
-}

@@ -267,10 +267,10 @@ class Http2DispatcherSpec extends AnyFunSuite {
   }
 
   test("multiplexed dispatcher: an expired stream is abandoned without poisoning its connection") {
-    // the property stream ids buy over the FIFO socket protocol: a
-    // deadline on one stream must not fail in-flight siblings or retire
-    // the connection — the late response is simply dropped by the id
-    // lookup, and the SAME connection keeps serving
+    // the property stream-id correlation buys: a deadline on one stream
+    // must not fail in-flight siblings or retire the connection — the late
+    // response is simply dropped by the id lookup, and the SAME connection
+    // keeps serving
     val stallMarker = "stall".getBytes("UTF-8")
     val server = new Http2ConsumerServer(req => {
       if (java.util.Arrays.equals(req.payload, stallMarker)) Thread.sleep(800)
@@ -289,6 +289,48 @@ class Http2DispatcherSpec extends AnyFunSuite {
         assert(server.acceptedConnections.get() == 1,
           s"dispatcher redialed (${server.acceptedConnections.get()} connections) — " +
             "the deadline poisoned the connection")
+      } finally d.close()
+    } finally server.close()
+  }
+
+  test("concurrent callers each get their own response over 4 multiplexed connections") {
+    // the echo carries the request's payload digest, its kafka-offset and
+    // its length, so a response handed to the WRONG caller is a visible
+    // mismatch, never a silent pass
+    def echo(payload: Array[Byte], offset: String): String =
+      s"${digestOf(payload)} offset=$offset len=${payload.length}"
+    val server = new Http2ConsumerServer(req => DispatchResult(GrpcStatus.OK,
+      Some(echo(req.payload, req.headers.getOrElse("kafka-offset", ""))), overdue = false))
+    try {
+      val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.port,
+        rpcTimeoutMs = 5000, connections = 4)
+      try {
+        val threads = 16
+        val perThread = 250
+        val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val ts = (0 until threads).map { t =>
+          val th = new Thread(() => {
+            val rng = new scala.util.Random(1000 + t)
+            for (i <- 0 until perThread) {
+              val payload = new Array[Byte](1 + rng.nextInt(2048))
+              rng.nextBytes(payload)
+              val res = d.dispatch(DispatchRequest(payload,
+                Map("kafka-offset" -> s"$t-$i", "kafka-topic" -> topic)))
+              if (res.statusCode != GrpcStatus.OK)
+                errs.add(s"thread $t iter $i: status ${res.statusCode}")
+              else if (!res.action.contains(echo(payload, s"$t-$i")))
+                errs.add(s"thread $t iter $i: got someone else's response ${res.action}")
+            }
+          })
+          th.start(); th
+        }
+        ts.foreach(_.join(120000))
+        assert(errs.isEmpty, errs.toArray.take(5).mkString("; "))
+        // multiplexing is real: 4000 dispatches crossed exactly the
+        // dispatcher's `connections` connections, not one per RPC or thread
+        assert(server.acceptedConnections.get() == 4,
+          s"expected 4 connections for ${threads * perThread} dispatches, " +
+            s"dialed ${server.acceptedConnections.get()}")
       } finally d.close()
     } finally server.close()
   }

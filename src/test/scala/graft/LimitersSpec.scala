@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{BatchBudget, LatencyTracker, TokenBucket, VegasLimiter}
+import graft.streaming.{LatencyTracker, TokenBucket, VegasLimiter}
 import org.scalatest.funsuite.AnyFunSuite
 
 class LimitersSpec extends AnyFunSuite {
@@ -65,13 +65,5 @@ class LimitersSpec extends AnyFunSuite {
     val s = lt.stats
     assert(s.count == 4)
     assert(s.maxNanos == 500L) // 100 evicted
-  }
-
-  test("batch budget translates rates to per-trigger caps") {
-    val b = BatchBudget(4000.0, 16.0 * 1024 * 1024, 2.0)
-    assert(b.maxMessages == 8000L)
-    assert(b.maxBytes == 32L * 1024 * 1024)
-    val unlimited = BatchBudget(Double.MaxValue, Double.MaxValue, 1.0)
-    assert(unlimited.maxMessages == Long.MaxValue)
   }
 }

@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source-tree guards that keep three consolidations from being undone:
+/** Source-tree guards that keep four consolidations from being undone:
   * every local Spark session comes from `GraftConf.local`, the cross-batch
-  * ack tracker is one operator, `AckStateTws`, and every keyed-state
-  * operator is a `transformWithState` processor. Runs from the project
-  * root. */
+  * ack tracker is one operator, `AckStateTws`, every keyed-state operator
+  * is a `transformWithState` processor, and HTTP/2 is the one network
+  * dispatch protocol. Runs from the project root. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def files(root: String): Seq[Path] = {
@@ -43,5 +43,19 @@ class SourceGuardSpec extends AnyFunSuite {
     val offenders = containing(files("src/main"), "Groups" + "WithState")
     assert(offenders.isEmpty,
       s"keyed state is a transformWithState StatefulProcessor; found in ${offenders.mkString(", ")}")
+  }
+
+  test("the retired framed-socket protocol and its helpers are named nowhere under src/") {
+    // assembled, so this file does not name them either
+    val retired = Seq("Socket" + "Dispatcher", "PipelinedSocket" + "Dispatcher",
+      "SocketConsumer" + "Server", "Batch" + "Budget", "Wire" + "Probe")
+    val all = files("src")
+    val offenders = for {
+      name <- retired
+      p <- containing(all, name)
+    } yield s"$name in $p"
+    assert(offenders.isEmpty,
+      "MultiplexedHttp2Dispatcher with Http2ConsumerServer is the one network dispatch " +
+        s"path: ${offenders.mkString(", ")}")
   }
 }
