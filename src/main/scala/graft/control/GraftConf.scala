@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
  * value chosen for the 100 TB / 1000-executor shape this library targets,
  * with the reasoning attached. `GraftConf(builder)` applies them;
  * `GraftConf.local(cpus)` is the one session the local-mode tools
- * (Bench, Verify, StageProfile, ...) run in, with test-sized values.
+ * (Bench, Verify, Explain, RunOne, Demo) run in, with test-sized values.
  *
  * Why these and not others:
  *  - AQE + skew-join + coalesce: runtime re-planning is the only defense
@@ -28,8 +28,8 @@ import org.apache.spark.sql.SparkSession
  *    small recompiles (and re-JITs) in steady state.
  *  - RocksDB state store + unload-on-commit: bounded heap for streaming
  *    state of any size; required by every keyed-state operator, since
- *    each is a transformWithState processor (AckStateTws, NearDupStream,
- *    Sessionize, ...).
+ *    each is a transformWithState processor (NearDupStream,
+ *    NoveltyStream, PackStream).
  */
 object GraftConf {
   val Settings: Map[String, String] = Map(

@@ -141,7 +141,9 @@ object KafkaSourceConfig {
     "kafka.max.request.size" -> (30 * 1024 * 1024).toString) ++
     securityOptions(security)
 
-  /** messages_per_sec × trigger window, the micro-batch admission quota. */
+  /** messages_per_sec × trigger window, the micro-batch admission quota.
+    * The one quota either source enforces: `FlowControl.bytesPerSec` has no
+    * source-side form, since Spark's Kafka source caps offsets, not bytes. */
   def maxOffsetsPerTrigger(fc: FlowControl, triggerSec: Double): Option[Long] =
     if (fc.messagesPerSec >= Double.MaxValue) None
     else Some(math.max(1L, (fc.messagesPerSec * triggerSec).toLong))

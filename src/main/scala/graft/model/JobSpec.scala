@@ -17,6 +17,11 @@ final case class RetryTier(
     processingDelayMs: Long,
     maxRetryCount: Int)
 
+/** A job's quotas. `messagesPerSec` becomes the source's
+  * `maxOffsetsPerTrigger` and `maxInflightMessages` caps a slice's
+  * concurrent dispatches; `bytesPerSec` is validated, stored and reported
+  * but not enforced — neither source caps bytes per trigger (Spark's Kafka
+  * source has no such option). */
 final case class FlowControl(
     messagesPerSec: Double,
     bytesPerSec: Double,

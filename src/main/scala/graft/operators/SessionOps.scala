@@ -19,9 +19,7 @@ object SessionOps {
 
   // ===========================================================
   // q16 — gap-based sessionization: a >30-minute silence starts a new
-  // session. The batch shadow of stateful stream sessionization
-  // (streaming/Sessionize, transformWithState with a session timer);
-  // lag + running sum.
+  // session; lag + running sum.
   // ===========================================================
   private val GapNs = 30L * 60 * 1000 * 1000 * 1000
 

@@ -19,10 +19,9 @@ import scala.collection.mutable
  *   - bounded capacity: `isFull` signals admission backpressure
  *     (the caller stops feeding instead of blocking — micro-batch style)
  *
- * The engine's task-local tracker: ForwardingEngine.processSlice keeps one
- * per (topic, partition) of its slice, guarded by the slice's completion
- * lock. It is also the reference model the cross-batch operator
- * ([[AckStateTws]]) is tested against. Not thread-safe on its own.
+ * The engine's one ack state machine: ForwardingEngine.processSlice keeps
+ * one per (topic, partition) of its slice, guarded by the slice's
+ * completion lock. Not thread-safe on its own.
  */
 object AckTrackingQueue {
   val InitialOffset: Long = -1L
@@ -30,12 +29,12 @@ object AckTrackingQueue {
   val DuplicatedAck: Long = -2L
   val InMemoryAckOnly: Long = -3L
 
-  sealed abstract class AckStatus(val rank: Int)
+  sealed abstract class AckStatus
   object AckStatus {
-    case object Unset    extends AckStatus(0)
-    case object Nacked   extends AckStatus(1)
-    case object Canceled extends AckStatus(2)
-    case object Acked    extends AckStatus(3)
+    case object Unset    extends AckStatus
+    case object Nacked   extends AckStatus
+    case object Canceled extends AckStatus
+    case object Acked    extends AckStatus
   }
 }
 
@@ -47,7 +46,6 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
   private val cancelable = mutable.LinkedHashSet.empty[Long]
 
   var highestReceivedOffset: Long = InitialOffset
-  var highestAckedOffset: Long = InitialOffset
   var highestCommittedOffset: Long = InitialOffset
 
   def size: Int = statuses.size
@@ -59,10 +57,7 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
   def receive(offset: Long): Boolean = {
     if (offset <= highestReceivedOffset) return false
     if (isFull) return false
-    if (highestReceivedOffset == InitialOffset) {
-      highestCommittedOffset = offset
-      highestAckedOffset = offset
-    }
+    if (highestReceivedOffset == InitialOffset) highestCommittedOffset = offset
     statuses.put(offset, AckStatus.Unset)
     cancelable.add(offset)
     highestReceivedOffset = offset
@@ -96,12 +91,8 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
           while (statuses.nonEmpty && statuses.head._1 < committed)
             statuses.remove(statuses.head._1)
           highestCommittedOffset = committed
-          if (highestAckedOffset < offset) highestAckedOffset = offset
           committed
-        } else {
-          if (highestAckedOffset < offset) highestAckedOffset = offset
-          InMemoryAckOnly
-        }
+        } else InMemoryAckOnly
     }
   }
 
@@ -149,12 +140,8 @@ final class AckTrackingQueue(val capacity: Int = 10000) {
 final case class HeadBlockingDetector(
     criticalLoadFactor: Double = 0.9,
     minAckPercent: Double = 0.9) {
-  /** True when a queue this full and this acked is blocked by its head. */
-  def blocked(loadFactor: Double, ackedFraction: Double): Boolean =
-    loadFactor >= criticalLoadFactor && ackedFraction >= minAckPercent
-
   def detect(q: AckTrackingQueue): Option[Long] = {
-    if (blocked(q.loadFactor, q.ackedFraction)) {
+    if (q.loadFactor >= criticalLoadFactor && q.ackedFraction >= minAckPercent) {
       val o = q.lowestCancelableOffset
       if (o != AckTrackingQueue.InitialOffset) Some(o) else None
     } else None

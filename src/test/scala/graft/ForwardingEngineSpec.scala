@@ -286,6 +286,12 @@ class ForwardingEngineSpec extends AnyFunSuite {
     // canceled head resolves to RETRY and is produced to the retry tier
     assert(head.code == "RETRY")
     assert(head.destination == TopicNames.retry(topic, group, 1))
+    // the diverted pill is re-wrapped with its logical identity and the
+    // bumped retry count, so the retry topic's consumer sees a well-formed message
+    val meta = DlqMetadata.decode(head.outKey).get
+    assert(meta.topic == topic && meta.partition == 0 && meta.offset == 0L)
+    assert(meta.retryCount == 1L)
+    assert(new String(head.outValue, "UTF-8") == "h0")
     assert(outcomes.filter(_.physicalOffset > 0).forall(_.code == "COMMIT"))
     // the batch must not have waited for the 5s-stuck dispatch
     assert(elapsedSec < 4.0, s"took $elapsedSec s")

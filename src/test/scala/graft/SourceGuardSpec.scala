@@ -7,10 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source-tree guards that keep four consolidations from being undone:
-  * every local Spark session comes from `GraftConf.local`, the cross-batch
-  * ack tracker is one operator, `AckStateTws`, every keyed-state operator
-  * is a `transformWithState` processor, and HTTP/2 is the one network
-  * dispatch protocol. Runs from the project root. */
+  * every local Spark session comes from `GraftConf.local`, the engine's
+  * `AckTrackingQueue` is the one ack state machine and the retired
+  * streams stay gone, every keyed-state operator is a `transformWithState`
+  * processor, and HTTP/2 is the one network dispatch protocol. Runs from
+  * the project root. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def files(root: String): Seq[Path] = {
@@ -32,11 +33,19 @@ class SourceGuardSpec extends AnyFunSuite {
       s"build local sessions with GraftConf.local(cpus), not by hand: ${offenders.mkString(", ")}")
   }
 
-  test("the retired flatMapGroupsWithState ack operator is named nowhere under src/") {
-    val retired = "AckState" + "Op" // split, so this file does not name it either
-    val offenders = containing(files("src"), retired)
+  test("the retired ack operators and uncalled streams are named nowhere under src/") {
+    // assembled, so this file does not name them either; the sessionizer
+    // only as a whole word, so SessionOps' q16 query function does not match
+    val retired = Seq("AckState" + "Op", "AckState" + "Tws", "Decon" + "Stream",
+      "Calibration" + "Stream", "Diversity" + "Stream", "\\b" + "Session" + "ize\\b").map(_.r)
+    val all = files("src")
+    val offenders = for {
+      name <- retired
+      p <- all if name.findFirstIn(Files.readString(p)).isDefined
+    } yield s"$name in $p"
     assert(offenders.isEmpty,
-      s"AckStateTws is the one cross-batch ack operator; $retired is named in ${offenders.mkString(", ")}")
+      "the engine's AckTrackingQueue is the one ack state machine and no job starts the " +
+        s"retired streams: ${offenders.mkString(", ")}")
   }
 
   test("no flatMapGroupsWithState or mapGroupsWithState under src/main") {

@@ -1,17 +1,16 @@
 package graft
 
-import graft.streaming.{AckStateTws, NearDupStream, PackStream}
-import graft.streaming.AckStateTws.AckEvent
+import graft.streaming.{NearDupStream, PackStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Long-run state soak for the transformWithState operators: the claimed
-  * state bounds — AckStateTws O(in-flight), NearDupStream O(buckets inside
-  * the eviction horizon), PackStream O(sources) — are asserted NUMERICALLY
-  * from `StreamingQueryProgress.stateOperators` over thousands to 10^5
-  * events and dozens of triggers, not just structurally. A state leak (purge that stops
+  * state bounds — NearDupStream O(buckets inside the eviction horizon),
+  * PackStream O(sources) — are asserted NUMERICALLY from
+  * `StreamingQueryProgress.stateOperators` over thousands to 10^5 events
+  * and dozens of triggers, not just structurally. A state leak (purge that stops
   * purging, buckets that never release) grows with event count and
   * crosses these bounds within a few triggers. */
 class StateSoakSpec extends AnyFunSuite {
@@ -39,45 +38,6 @@ class StateSoakSpec extends AnyFunSuite {
       if (p != null) samples += p.stateOperators.map(_.numRowsTotal).sum
     }
     samples.result()
-  }
-
-  test("AckStateTws state tracks in-flight depth, not event count (100k events)") {
-    val keys = 2
-    val perTrigger = 1000
-    val triggers = 50 // 2 x 50 x 1000 = 100k events
-    val input = MemoryStream[AckEvent](
-      implicitly[org.apache.spark.sql.Encoder[AckEvent]], spark.sqlContext)
-    val q = AckStateTws.updates(input.toDS(), capacity = 100000)
-      .writeStream.outputMode("append").format("memory").queryName("soak_ack").start()
-    try {
-      // trigger i: receive batch i, ack batch i-1 → steady-state in-flight
-      // is ONE batch per key while total delivered events grow 100x past it
-      val batches = (0 until triggers).iterator.map { i =>
-        (0 until keys).flatMap { p =>
-          val recv = (0 until perTrigger)
-            .map(j => AckEvent("t", p, i.toLong * perTrigger + j, "receive"))
-          val acks = if (i == 0) Seq.empty else (0 until perTrigger)
-            .map(j => AckEvent("t", p, (i - 1).toLong * perTrigger + j + 1, "ack"))
-          recv ++ acks
-        }
-      }
-      val samples = soak(input, q, batches)
-      assert(samples.size >= triggers - 2)
-      // bound: per key, one scalars row + <= 2 batches of nodes (current +
-      // the one acked this trigger before its purge completes) + slack.
-      // 100k delivered events must NOT show up here.
-      val bound = keys.toLong * (2L * perTrigger + 16L)
-      assert(samples.max <= bound,
-        s"state grew past in-flight bound: max=${samples.max} bound=$bound samples=${samples.take(20)}")
-      // drain: ack the final outstanding batch → state collapses to the
-      // scalar rows (purge really deletes nodes, not just marks them)
-      input.addData((0 until keys).flatMap(p => (0 until perTrigger)
-        .map(j => AckEvent("t", p, (triggers - 1).toLong * perTrigger + j + 1, "ack"))))
-      q.processAllAvailable()
-      val drained = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(drained <= keys * 4L,
-        s"acked-out queue still holds $drained state rows (purge leak)")
-    } finally q.stop()
   }
 
   test("NearDupStream bucket state tracks the eviction horizon, not arrivals (1k docs)") {
