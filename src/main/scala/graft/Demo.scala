@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end training-data pipeline demo over one testdata directory:
   * curation gate funnel → trained BPE merge table → per-source fertility →
-  * sequence packing — the batch flow whose live twins are
-  * streaming/{StreamDedup, TokenizerStream, IndexStream, PackStream}.
+  * sequence packing, all as batch queries.
   *
   * Usage: sbt "runMain graft.Demo [sfDir]"
   *

@@ -48,13 +48,10 @@ final class ControlPlane(
   val scalingLoop = new ScalingLoop(jobManager, scaler, statusStore = statusStore)
   val workers = new TtlRegistry[String, Long](ttlMs = tickMs * 3, clock = clock)
   val lease = new LeaseGuard(jobManager, leaseMs, clock)
-  /** attach monitor queries with `monitors.sink(kind)` as foreachBatch —
-    * their windows serve at /status/monitors */
-  val monitors = new MonitorHub(clock = clock)
   private val listener = new StatusListener(statusStore, clock = clock)
   private val server =
     new StatusServer(jobManager, Some(scaler), Some(workers), Some(statusStore),
-      port = port, admin = Some(admin), monitors = Some(monitors))
+      port = port, admin = Some(admin))
 
   /** What one tick did — returned so callers (and tests) observe the loop
     * instead of polling for its side effects. */

@@ -26,10 +26,10 @@ import org.apache.spark.sql.SparkSession
  *  - codegen.cache.maxEntries: a workload with ~100 distinct query shapes
  *    generates far more than the default 100 cached classes; an LRU that
  *    small recompiles (and re-JITs) in steady state.
- *  - RocksDB state store + unload-on-commit: bounded heap for streaming
- *    state of any size; required by every keyed-state operator, since
- *    each is a transformWithState processor (NearDupStream,
- *    NoveltyStream, PackStream).
+ *  - RocksDB state store: streaming state lives off-heap, so heap stays
+ *    bounded whatever the state size. Its one stateful user is
+ *    AuditStream's windowed aggregation (the AUDIT job): one KMV sketch
+ *    per (window, topic), dropped as the watermark passes the window.
  */
 object GraftConf {
   val Settings: Map[String, String] = Map(

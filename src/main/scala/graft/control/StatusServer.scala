@@ -51,8 +51,6 @@ final class TtlRegistry[K, V](
  *   GET /status/workers -> live worker heartbeats (TTL-filtered)
  *   GET /status/scaler  -> per-group AutoScaler snapshot
  *   GET /status/history -> TTL'd JobStatus heartbeat history per group
- *   GET /status/monitors[?kind=drift|hotkeys|...] -> live data-quality
- *       monitor windows (via [[MonitorHub]] foreachBatch sinks)
  *   GET /health         -> {"status":"ok"}
  *
  * When an [[AdminService]] is supplied, the mutation surface mounts too —
@@ -73,8 +71,7 @@ final class StatusServer(
     workers: Option[TtlRegistry[String, Long]] = None,
     statusStore: Option[JobStatusStore] = None,
     port: Int = 0,
-    admin: Option[AdminService] = None,
-    monitors: Option[MonitorHub] = None) {
+    admin: Option[AdminService] = None) {
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
@@ -194,14 +191,6 @@ final class StatusServer(
   server.createContext("/status/scaler", (ex: HttpExchange) => reply(ex, scalerJson))
   server.createContext("/status/history", (ex: HttpExchange) =>
     reply(ex, statusStore.map(_.historyJson).getOrElse("[]")))
-  // live data-quality monitor snapshots (DriftStream / HotKeyStream /
-  // AuditStream windows pushed through a MonitorHub foreachBatch sink);
-  // ?kind=drift selects one monitor, no param returns all kinds keyed
-  server.createContext("/status/monitors", (ex: HttpExchange) =>
-    reply(ex, monitors match {
-      case None => "{}"
-      case Some(h) => queryParam(ex, "kind").map(h.json).getOrElse(h.allJson)
-    }))
   server.createContext("/health", (ex: HttpExchange) => reply(ex, """{"status":"ok"}"""))
   // The HTML debug surface, same shape as the reference's management pages
   // (uforwarder-core/.../management/AbstractHtml.java + JobsHtml/WorkersHtml/
@@ -242,7 +231,7 @@ object StatusServer {
       |<script>
       |const SECTIONS = [["jobs","/status/jobs"],["workers","/status/workers"],
       |  ["scaler","/status/scaler"],["history","/status/history"],
-      |  ["monitors","/status/monitors"],["jobgroups","/admin/jobgroups"]];
+      |  ["jobgroups","/admin/jobgroups"]];
       |// ids/values are free-form strings: everything reaching innerHTML is
       |// HTML-escaped, or a hostile jobGroupId becomes script on this page
       |function esc(s){return String(s).replace(/[&<>"']/g,
@@ -262,8 +251,6 @@ object StatusServer {
       |    document.getElementById("root").innerHTML = all.filter(([,d])=>d!==null).map(([n,d])=>
       |      "<h2>"+n+"</h2>"+(n==="history"
       |        ? d.map(g=>"<h3>"+esc(g.jobGroupId)+"</h3>"+table(g.history)).join("")||"<i>empty</i>"
-      |        : n==="monitors"
-      |        ? Object.entries(d).map(([k,rows])=>"<h3>"+esc(k)+"</h3>"+table(rows)).join("")||"<i>empty</i>"
       |        : n==="jobgroups"
       |        ? table(d.map(g=>({jobGroupId:g.jobGroup.jobGroupId,state:g.jobGroupState,
       |            topic:g.jobGroup.topic,consumerGroup:g.jobGroup.consumerGroup,

@@ -42,11 +42,14 @@ final case class RpcSpec(
 /**
  * Security posture of a job (reference: job.proto:370-379 SecurityConfig).
  * `serviceIdentities` are the principal names allowed to consume the topic
- * (SPIFFE-style); `isSecure` turns TLS on for BOTH the Kafka client and the
- * RPC dispatcher channel; identities are advisory until enforced at the
- * dispatcher boundary. `clientOptions` carries deployment-specific TLS
- * material (e.g. `ssl.truststore.location`) merged verbatim into the Kafka
- * client config — the engine stays agnostic of any site's provider classes.
+ * (SPIFFE-style); `isSecure` turns TLS on for the Kafka client only
+ * (KafkaSourceConfig.securityOptions). Dispatcher TLS is not implemented:
+ * no DispatcherFactory overrides `create(security)`, so the HTTP/2
+ * dispatcher dials plaintext whatever `isSecure` says. Identities are
+ * advisory until enforced at the dispatcher boundary. `clientOptions`
+ * carries deployment-specific TLS material (e.g.
+ * `ssl.truststore.location`) merged verbatim into the Kafka client config
+ * — the engine stays agnostic of any site's provider classes.
  */
 final case class SecuritySpec(
     serviceIdentities: Seq[String] = Nil,

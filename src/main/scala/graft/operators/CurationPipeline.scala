@@ -58,13 +58,6 @@ object CurationPipeline {
       guess === "und" || guess === col("lang")
     }))
 
-  /** The per-row subset of [[standardStages]] — every predicate is
-    * window-free, so these run unchanged on a STREAM (exact-dup needs
-    * corpus state; its live form is `StreamDedup`'s watermark dedup /
-    * snapshot Bloom gate, applied before or after the funnel). */
-  def statelessStages(minTokens: Int = 5, minDistinctPermille: Long = 250L): Seq[GateStage] =
-    standardStages(minTokens, minDistinctPermille).filterNot(_.name == "exact_dup")
-
   /** Pre-annotator for [[memorizedStage]]: adds `longest_dup_run` — each
     * document's longest unbroken run of corpus-duplicated
     * [[TextOps.NgramW]]-gram positions (0 when none), computed by the SAME
@@ -109,10 +102,9 @@ object CurationPipeline {
       tokens > 0 && TextOps.qualityMargin(w, x1, x2, x3) > 0
     })
 
-  /** Gate columns + first-failing `drop_stage` over `docs` — the shared
-    * annotation step of the batch [[run]] and the live
-    * [[graft.streaming.CurationStream]]. */
-  def annotate(docs: DataFrame, stages: Seq[GateStage]): DataFrame = {
+  /** Gate columns + first-failing `drop_stage` over `docs` — the
+    * annotation step of [[run]]. */
+  private def annotate(docs: DataFrame, stages: Seq[GateStage]): DataFrame = {
     require(stages.nonEmpty, "need at least one gate stage")
     require(stages.map(_.name).distinct.size == stages.size, "stage names must be unique")
     // a gate that cannot evaluate (null text/lang reaching a null-valued

@@ -100,7 +100,7 @@ object SimilarityOps {
   // true Jaccard on candidate docs only. The full pipeline is replayed
   // exactly by the generated SQL oracle (q41Sql below).
   // ===========================================================
-  val NumHashes = 32
+  private val NumHashes = 32
   /** 4 bands x 8 rows: a candidate needs 8 matching minhashes in one band —
     * selective enough that candidate counts stay linear in corpus size even
     * for heavily templated corpora (band size 4 produced 73k candidates on
@@ -142,17 +142,14 @@ object SimilarityOps {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
 
   /** The banding expression over a `sig` column (array of band_sig strings,
-    * position = band) — exposed so the streaming twin (NearDupStream) bands
-    * arrivals with EXACTLY the projection the batch snapshot used. */
-  private[graft] def bandArrayExpr(r: Int): Column =
+    * position = band). */
+  private def bandArrayExpr(r: Int): Column =
     expr(s"transform(sequence(0, ${NumHashes / r - 1}), b -> " +
       s"concat_ws(':', transform(slice(sig, b * $r + 1, $r), x -> CAST(x AS STRING))))")
 
   /** The q41-family per-doc shingle set (distinct 5-char substrings) as an
-    * expression over a `text` column — the one definition shared by batch
-    * verification (jaccardVerify's default) and the streaming twin, so
-    * stream and batch verify candidates over identical sets. */
-  private[graft] def charShingles: Column =
+    * expression over a `text` column — jaccardVerify's default. */
+  private def charShingles: Column =
     graft.plans.TextKernels.char_shingles(col("text"), 5)
 
   /** Banded buckets for a given rows-per-band r over a signature frame. */
@@ -429,8 +426,8 @@ object SimilarityOps {
        |FROM cls GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")
 
   // ===========================================================
-  // q171 — snapshot ROLL: the daily loop closed. q161 (and its streaming
-  // twin) probe a FIXED snapshot; a production pipeline rolls day N's
+  // q171 — snapshot ROLL: the daily loop closed. q161 probes a FIXED
+  // snapshot; a production pipeline rolls day N's
   // kept arrivals into day N+1's snapshot state WITHOUT rescanning the
   // old corpus. The rollable state is the capped band-bucket table
   // itself — (band, band_sig, smallest cap+1 member ids) — which is

@@ -22,23 +22,21 @@ object TextOps {
     spark.read.parquet(s"$dir/documents.parquet")
 
   /** normalized text: lowercase, whitespace squeezed, trimmed.
-    * Graft-visible so composite pipelines (q38) AND the streaming twins
-    * (IngestFunnel's exact-dedup digest) use the SAME normalization as
-    * the dedup/fingerprint operators. */
+    * Graft-visible so composite pipelines (q38) use the SAME
+    * normalization as the dedup/fingerprint operators. */
   private[graft] def norm =
     trim(regexp_replace(lower(col("text")), "[ \\t\\n\\r\\f]+", " "))
   private[operators] val normSql =
     "trim(regexp_replace(lower(text), '[ \\t\\n\\r\\f]+', ' ', 'g'))"
   /** one whitespace-delimited token (explicit class, see header);
-    * graft-visible so the streaming twins tokenize identically */
+    * graft-visible so every operator family tokenizes identically */
   private[graft] val wsTokenRe = "[^ \\t\\n\\r\\f]+"
 
   /** q118's symbol representation: every character wrapped in its own
-    * spaces (" a  b  c "). ONE definition serves the batch trainer and
-    * the streaming fertility monitor — a regex-based re-implementation
-    * drifted once (Java's '(.)' skips line-terminator chars the
-    * whitespace tokenizer keeps). */
-  private[graft] def wrapSymbols(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    * spaces (" a  b  c "). Built from substrings, not a regex: a
+    * regex-based form drifted once (Java's '(.)' skips line-terminator
+    * chars the whitespace tokenizer keeps). */
+  private def wrapSymbols(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat_ws("", transform(sequence(lit(1), length(c)),
       i => concat(lit(" "), c.substr(i, lit(1)), lit(" "))))
 
@@ -1900,8 +1898,8 @@ object TextOps {
   // digests roll in, day 2 probes the ROLLED set. The oracle recomputes
   // day 2's digest set from scratch over base ∪ kept-day-1, so the
   // hash-exact compare proves roll ≡ recompute — with q171 (band state)
-  // and StreamDedup.rollSnapshotBits (Bloom bits, lossless OR) this
-  // closes the daily loop on all three incremental-dedup state forms.
+  // this closes the daily loop on both batch incremental-dedup state
+  // forms.
   //
   // Scale path: the state is a digest column (itself incrementally
   // maintained); each day is one hash equi-join probe + one per-digest

@@ -371,24 +371,6 @@ object ForwardingEngine {
   }
 
   /**
-   * Streaming throughput tracker: per-topic msgs/sec + bytes/sec over
-   * 1-minute event-time windows (the ThroughputTracker analog; reference:
-   * uforwarder-core/.../fetchers/kafka/ThroughputTracker.java:11,50-75).
-   * Watermarked windowed aggregation — partial aggregation happens map-side,
-   * state is bounded by the watermark horizon.
-   */
-  def throughput(records: Dataset[KafkaRecord]): org.apache.spark.sql.DataFrame =
-    records
-      .withColumn("ts", timestamp_micros(expr("timestampNs DIV 1000")))
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "1 minute"), col("topic"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(octet_length(col("value"))).cast("long").as("bytes"))
-      .withColumn("msgs_per_sec", col("n") / 60.0)
-      .withColumn("bytes_per_sec", col("bytes") / 60.0)
-
-  /**
    * Start the streaming pipeline: source stream → processBatch → produce
    * routed records to the queue store + expose outcomes.
    */
@@ -448,10 +430,11 @@ trait Dispatcher extends java.io.Closeable {
   * case class or an object: two equal factories must be interchangeable,
   * and a factory without value equality gets a new dispatcher in every
   * task. A dispatcher must serve concurrent callers and re-dial a dead
-  * connection itself. Security-aware factories override the two-arg form
-  * to build TLS channels / verify service identities from the job's
+  * connection itself. Security-aware factories would override the two-arg
+  * form to build TLS channels / verify service identities from the job's
   * SecurityConfig (reference: job.proto:370-379; the fetcher side keys
-  * channel pools by (cluster, isSecure) — ClusterAndIsSecureKey.java). */
+  * channel pools by (cluster, isSecure) — ClusterAndIsSecureKey.java); no
+  * factory here does, so dispatcher TLS is not implemented. */
 trait DispatcherFactory extends Serializable {
   def create(): Dispatcher
   def create(security: graft.model.SecuritySpec): Dispatcher = create()

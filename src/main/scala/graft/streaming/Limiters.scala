@@ -45,7 +45,6 @@ final class VegasLimiter(
   private var minRttNanos: Long = Long.MaxValue
 
   def currentLimit: Int = synchronized(limit)
-  def currentInflight: Int = synchronized(inflight)
 
   /** Non-blocking permit acquisition. */
   def tryAcquire(): Boolean = synchronized {

@@ -299,27 +299,6 @@ class ForwardingEngineSpec extends AnyFunSuite {
     assert(outcomes.map(_.commitWatermark).max == 8L)
   }
 
-  // === streaming windowed throughput (ThroughputTracker analog) ===
-  test("streaming throughput aggregates per-topic 1-minute windows") {
-    val minuteNs = 60L * 1000 * 1000 * 1000
-    val base = 1700000000000000000L - (1700000000000000000L % minuteNs)
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KafkaRecord](
-      implicitly[org.apache.spark.sql.Encoder[KafkaRecord]], spark.sqlContext)
-    input.addData(
-      (0 until 6).map(i => KafkaRecord(null, ("x" * 10).getBytes, "tp-a", 0, i.toLong,
-        base + i * 1000000000L, Map.empty)) ++
-      (0 until 3).map(i => KafkaRecord(null, ("y" * 20).getBytes, "tp-b", 0, i.toLong,
-        base + minuteNs + i * 1000000000L, Map.empty)))
-    val q = ForwardingEngine.throughput(input.toDS())
-      .writeStream.outputMode("complete").format("memory").queryName("tput").start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.sql("SELECT topic, n, bytes, msgs_per_sec FROM tput ORDER BY topic").collect()
-    assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
-      Seq(("tp-a", 6L, 60L), ("tp-b", 3L, 60L)))
-    assert(rows.head.getDouble(3) == 6.0 / 60.0)
-  }
-
   // === streaming path: MemoryStream -> foreachBatch -> outcomes ===
   test("streaming run() processes a MemoryStream end to end") {
     TestConsumer.reset()
