@@ -1,5 +1,6 @@
 package graft.control
 
+import graft.streaming.LocalCheckpointFiles
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -30,6 +31,10 @@ import org.apache.spark.sql.SparkSession
  *    bounded whatever the state size. Its one stateful user is
  *    AuditStream's windowed aggregation (the AUDIT job): one KMV sketch
  *    per (window, topic), dropped as the watermark passes the window.
+ *  - checkpointFileManagerClass = LocalCheckpointFiles: on a local
+ *    checkpoint, the offset- and commit-log writes every trigger makes fork
+ *    no `chmod`/`readlink` (Hadoop without libhadoop); other file systems
+ *    keep Spark's own manager.
  */
 object GraftConf {
   val Settings: Map[String, String] = Map(
@@ -41,6 +46,7 @@ object GraftConf {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    LocalCheckpointFiles.ClassKey -> classOf[LocalCheckpointFiles].getName,
     "spark.sql.shuffle.partitions" -> "2000") // floor for ~1000 executors x 2-3 cores each; AQE coalesces down
 
   /** Apply the production settings to a session builder. Callers override
@@ -49,8 +55,8 @@ object GraftConf {
     Settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   /** The local-mode session: `local[cpus]` with the graft planner
-    * extensions and one shuffle partition per core. Callers set their own
-    * log level. */
+    * extensions, one shuffle partition per core and the production
+    * checkpoint file manager. Callers set their own log level. */
   def local(cpus: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -63,5 +69,6 @@ object GraftConf {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(LocalCheckpointFiles.ClassKey, Settings(LocalCheckpointFiles.ClassKey))
     .getOrCreate()
 }

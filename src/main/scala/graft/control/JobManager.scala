@@ -253,10 +253,12 @@ final class ScalingLoop(
 
   /** Apply a decision to a spec: the new FlowControl quota the group should
     * run with (the reference's UPDATE_JOB quota push —
-    * ProcessorImpl.updateQuota). */
+    * ProcessorImpl.updateQuota), both rates at the decided scale of one
+    * worker's budget, never below one worker's. */
   def updatedSpec(spec: graft.model.JobSpec, d: Decision): graft.model.JobSpec =
     spec.copy(flowControl = spec.flowControl.copy(
-      messagesPerSec = math.max(d.messagesPerSec, AutoScaler.MessagesPerWorker)))
+      messagesPerSec = math.max(d.messagesPerSec, AutoScaler.MessagesPerWorker),
+      bytesPerSec = math.max(d.scale, 1.0) * AutoScaler.BytesPerWorker))
 }
 
 /**

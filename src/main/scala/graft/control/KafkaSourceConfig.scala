@@ -141,10 +141,16 @@ object KafkaSourceConfig {
     "kafka.max.request.size" -> (30 * 1024 * 1024).toString) ++
     securityOptions(security)
 
-  /** messages_per_sec × trigger window, the micro-batch admission quota.
-    * The one quota either source enforces: `FlowControl.bytesPerSec` has no
-    * source-side form, since Spark's Kafka source caps offsets, not bytes. */
+  /** messages_per_sec × trigger window, the micro-batch admission quota
+    * both sources enforce. */
   def maxOffsetsPerTrigger(fc: FlowControl, triggerSec: Double): Option[Long] =
     if (fc.messagesPerSec >= Double.MaxValue) None
     else Some(math.max(1L, (fc.messagesPerSec * triggerSec).toLong))
+
+  /** bytes_per_sec × trigger window, graft-queue's `maxbytespertrigger`.
+    * Only that source enforces it: Spark's Kafka source caps offsets, not
+    * bytes, so [[sourceOptions]] carries no byte cap. */
+  def maxBytesPerTrigger(fc: FlowControl, triggerSec: Double): Option[Long] =
+    if (fc.bytesPerSec >= Double.MaxValue) None
+    else Some(math.max(1L, (fc.bytesPerSec * triggerSec).toLong))
 }

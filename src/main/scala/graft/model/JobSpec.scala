@@ -18,10 +18,10 @@ final case class RetryTier(
     maxRetryCount: Int)
 
 /** A job's quotas. `messagesPerSec` becomes the source's
-  * `maxOffsetsPerTrigger` and `maxInflightMessages` caps a slice's
-  * concurrent dispatches; `bytesPerSec` is validated, stored and reported
-  * but not enforced — neither source caps bytes per trigger (Spark's Kafka
-  * source has no such option). */
+  * `maxOffsetsPerTrigger`, `bytesPerSec` graft-queue's `maxbytespertrigger`
+  * (Spark's Kafka source has no byte cap, so a `format("kafka")` job does
+  * not enforce it), and `maxInflightMessages` caps a slice's concurrent
+  * dispatches. */
 final case class FlowControl(
     messagesPerSec: Double,
     bytesPerSec: Double,

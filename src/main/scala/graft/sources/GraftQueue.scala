@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -176,6 +176,25 @@ object GraftBroker {
       s"offset range [$from, $until) exceeds the in-process broker's Int-indexed log")
     val buf = log(topic)(partition)
     buf.synchronized(buf.slice(from.toInt, until.toInt).toIndexedSeq)
+  }
+
+  /** Running key + value byte sums of the records at [from, until), the
+    * measure a byte cap admits by; the scan stops at the first sum past
+    * `limit`, so a deep backlog costs no more than the budget. */
+  def byteSums(topic: String, partition: Int, from: Long, until: Long, limit: Long): Array[Long] = {
+    val buf = log(topic)(partition)
+    buf.synchronized {
+      val sums = ArrayBuffer.empty[Long]
+      var sum = 0L
+      var i = from.toInt
+      while (i < until && sum <= limit) {
+        val r = buf(i)
+        sum += Option(r.key).fold(0)(_.length) + Option(r.value).fold(0)(_.length)
+        sums += sum
+        i += 1
+      }
+      sums.toArray
+    }
   }
 
   def commitGroup(group: String, offsets: Map[(String, Int), Long]): Unit =
@@ -360,6 +379,7 @@ class GraftQueueMicroBatchStream(options: CaseInsensitiveStringMap)
   private val groupId = Option(options.get("groupid"))
   private val startingOffsets = Option(options.get("startingoffsets")).getOrElse("earliest")
   private val maxOffsetsPerTrigger = Option(options.get("maxoffsetspertrigger")).map(_.toLong)
+  private val maxBytesPerTrigger = Option(options.get("maxbytespertrigger")).map(_.toLong)
   // timestamp->offset seek, the Kafka source's option names and precedence:
   // startingOffsetsByTimestamp (per-partition) > startingTimestamp (global)
   // > startingOffsets (KafkaSourceConfig.StartOffsets.ByTimestamp emits the
@@ -417,48 +437,65 @@ class GraftQueueMicroBatchStream(options: CaseInsensitiveStringMap)
   }
 
   override def getDefaultReadLimit: ReadLimit =
-    maxOffsetsPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
+    (maxOffsetsPerTrigger.map(ReadLimit.maxRows) ++ maxBytesPerTrigger.map(ReadLimit.maxBytes)).toSeq match {
+      case Seq() => ReadLimit.allAvailable()
+      case Seq(one) => one
+      case both => ReadLimit.compositeLimit(both.toArray)
+    }
 
   override def latestOffset(): Offset =
     sys.error("latestOffset(start, limit) should be called (SupportsAdmissionControl)")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startMap = start.asInstanceOf[GraftQueueOffset].offsets
+    def from(t: String, p: Int): Long = startMap.getOrElse(t, Map.empty).getOrElse(p, 0L)
     // Clamp the visibility-gated end to the checkpointed start: with
     // startingoffsets=latest the initial offset is the UNGATED log end, so a
     // visibility gate still behind it would otherwise return an end < start,
     // regressing the offset log (and, via commit(), the broker group) and
     // later re-delivering pre-start records once the gate opens.
     val end = availableEnd().map { case (t, pm) =>
-      t -> pm.map { case (p, e) =>
-        p -> math.max(e, startMap.getOrElse(t, Map.empty).getOrElse(p, 0L))
+      t -> pm.map { case (p, e) => p -> math.max(e, from(t, p)) }
+    }
+    // each cap splits its budget across partitions in proportion to what
+    // they hold (the Kafka source's rate-limit policy) and grants every
+    // non-empty partition at least one record; a composite limit applies
+    // its caps in turn, so the end meets all of them
+    def cap(end: Map[String, Map[Int, Long]], limit: ReadLimit): Map[String, Map[Int, Long]] =
+      limit match {
+        case mr: ReadMaxRows =>
+          val avail = for {
+            (t, pm) <- end.toSeq; (p, e) <- pm.toSeq if e > from(t, p)
+          } yield ((t, p), e - from(t, p))
+          val total = avail.map(_._2).sum
+          if (total <= mr.maxRows) end
+          else {
+            val budget = mr.maxRows.toDouble / total
+            val grants = avail.map { case (tp, n) =>
+              tp -> math.max(1L, math.floor(n * budget).toLong)
+            }.toMap
+            end.map { case (t, pm) => t -> pm.map { case (p, e) =>
+              p -> math.min(e, from(t, p) + grants.getOrElse((t, p), 0L))
+            } }
+          }
+        case mb: ReadMaxBytes =>
+          val sums = (for {
+            (t, pm) <- end.toSeq; (p, e) <- pm.toSeq if e > from(t, p)
+          } yield (t, p) -> GraftBroker.byteSums(t, p, from(t, p), e, mb.maxBytes)).toMap
+          val total = sums.values.map(_.last).sum
+          if (total <= mb.maxBytes) end
+          else {
+            val budget = mb.maxBytes.toDouble / total
+            end.map { case (t, pm) => t -> pm.map { case (p, e) =>
+              p -> sums.get((t, p)).fold(e) { s =>
+                from(t, p) + math.max(1, s.count(_ <= s.last * budget))
+              }
+            } }
+          }
+        case c: CompositeReadLimit => c.getReadLimits.foldLeft(end)(cap)
+        case _ => end // ReadAllAvailable
       }
-    }
-    val capped = limit match {
-      case _: ReadAllAvailable => end
-      case mr: ReadMaxRows =>
-        // distribute the row budget across partitions proportionally to
-        // availability (the Kafka source's rate-limit policy)
-        val avail = for {
-          (t, pm) <- end.toSeq; (p, e) <- pm.toSeq
-          s = startMap.getOrElse(t, Map.empty).getOrElse(p, 0L)
-          if e > s
-        } yield ((t, p), e - s)
-        val total = avail.map(_._2).sum
-        if (total <= mr.maxRows) end
-        else {
-          val budget = mr.maxRows.toDouble / total
-          val grants = avail.map { case (tp, n) =>
-            tp -> math.max(1L, math.floor(n * budget).toLong)
-          }.toMap
-          end.map { case (t, pm) => t -> pm.map { case (p, e) =>
-            val s = startMap.getOrElse(t, Map.empty).getOrElse(p, 0L)
-            p -> math.min(e, s + grants.getOrElse((t, p), 0L))
-          } }
-        }
-      case _ => end
-    }
-    GraftQueueOffset(capped)
+    GraftQueueOffset(cap(end, limit))
   }
 
   override def reportLatestOffset(): Offset = GraftQueueOffset(availableEnd())

@@ -20,7 +20,8 @@ object QueueJobs {
    * Live consumption stream for a job spec over the graft-queue connector —
    * the spec→source wiring the rebalance/actuation loops use: topics = main
    * + retry tiers, the consumer group, per-tier visibility delays, and the
-   * flow-control quota as the per-trigger admission cap. This is how an
+   * flow-control quota (messages and bytes per second) as the per-trigger
+   * admission caps. This is how an
    * UPDATE_JOB quota lands (reference: ProcessorImpl.updateQuota:1316-1365
    * applies FlowControl to the live limiter): Spark fixes source options at
    * query start, so [[graft.control.JobManager.update]] re-runs the query
@@ -43,6 +44,8 @@ object QueueJobs {
         delays.map(t => s"${t.topic}:${t.processingDelayMs}").mkString(","))
     graft.control.KafkaSourceConfig.maxOffsetsPerTrigger(spec.flowControl, triggerSec)
       .foreach(n => reader = reader.option("maxoffsetspertrigger", n.toString))
+    graft.control.KafkaSourceConfig.maxBytesPerTrigger(spec.flowControl, triggerSec)
+      .foreach(n => reader = reader.option("maxbytespertrigger", n.toString))
     ForwardingEngine.fromSourceFrame(reader.load())
   }
 

@@ -62,6 +62,53 @@ class GraftQueueSpec extends AnyFunSuite {
     assert(all == Map(0 -> 30L, 1 -> 10L))
   }
 
+  test("maxBytes caps each partition by summed key+value sizes, one record at least") {
+    GraftBroker.reset()
+    GraftBroker.createTopic("byt", 2)
+    // partition 0: ten 102-byte records (2-byte key + 100-byte value);
+    // partition 1: five 1,000-byte values with no key
+    (0 until 10).foreach(i => GraftBroker.produce("byt", Some(0), s"k$i".getBytes, Array.fill[Byte](100)(1)))
+    (0 until 5).foreach(_ => GraftBroker.produce("byt", Some(1), null, Array.fill[Byte](1000)(2)))
+    val s = stream(Map("topics" -> "byt"))
+    val start = GraftQueueOffset(Map("byt" -> Map(0 -> 0L, 1 -> 0L)))
+    def ends(limit: ReadLimit): Map[Int, Long] =
+      s.latestOffset(start, limit).asInstanceOf[GraftQueueOffset].offsets("byt")
+    // each partition's scan stops at its first sum past the budget (1,020
+    // and 2,000 bytes); the 1,000-byte budget splits in that proportion:
+    // ~338 bytes -> three 102-byte records, ~662 bytes -> less than one
+    // 1,000-byte record, which is still granted so the partition moves
+    assert(ends(ReadLimit.maxBytes(1000L)) == Map(0 -> 3L, 1 -> 1L))
+    // a budget that covers everything admits everything
+    assert(ends(ReadLimit.maxBytes(6020L)) == Map(0 -> 10L, 1 -> 5L))
+    // a budget below every record still moves each partition by one
+    assert(ends(ReadLimit.maxBytes(1L)) == Map(0 -> 1L, 1 -> 1L))
+    // from a later start only the records past it count
+    val later = GraftQueueOffset(Map("byt" -> Map(0 -> 8L, 1 -> 5L)))
+    assert(s.latestOffset(later, ReadLimit.maxBytes(150L)).asInstanceOf[GraftQueueOffset]
+      .offsets("byt") == Map(0 -> 9L, 1 -> 5L))
+  }
+
+  test("read limit: rows alone stay a row limit; a byte cap joins as a composite that meets both") {
+    GraftBroker.reset()
+    GraftBroker.createTopic("cmp", 1)
+    (0 until 40).foreach(i => GraftBroker.produce("cmp", Some(0), null, Array.fill[Byte](250)(i.toByte)))
+    // no byte cap: the limit, and so the planning path, is the row cap alone
+    assert(stream(Map("topics" -> "cmp", "maxoffsetspertrigger" -> "8")).getDefaultReadLimit ==
+      ReadLimit.maxRows(8L))
+    assert(stream(Map("topics" -> "cmp")).getDefaultReadLimit == ReadLimit.allAvailable())
+    assert(stream(Map("topics" -> "cmp", "maxbytespertrigger" -> "1000")).getDefaultReadLimit ==
+      ReadLimit.maxBytes(1000L))
+    val both = stream(Map("topics" -> "cmp", "maxoffsetspertrigger" -> "8", "maxbytespertrigger" -> "1000"))
+    assert(both.getDefaultReadLimit ==
+      ReadLimit.compositeLimit(Array(ReadLimit.maxRows(8L), ReadLimit.maxBytes(1000L))))
+    val start = GraftQueueOffset(Map("cmp" -> Map(0 -> 0L)))
+    def end(s: GraftQueueMicroBatchStream): Long =
+      s.latestOffset(start, s.getDefaultReadLimit).asInstanceOf[GraftQueueOffset].offsets("cmp")(0)
+    assert(end(both) == 4L, "four 250-byte records fill the byte cap before the row cap")
+    assert(end(stream(Map("topics" -> "cmp", "maxoffsetspertrigger" -> "3", "maxbytespertrigger" -> "1000"))) == 3L,
+      "the row cap binds when it is the tighter one")
+  }
+
   test("seek policies: earliest, latest, and committed-group resume") {
     GraftBroker.reset()
     GraftBroker.createTopic("seek", 1)

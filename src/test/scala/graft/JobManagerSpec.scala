@@ -318,4 +318,16 @@ class JobManagerSpec extends AnyFunSuite {
     // old version still readable
     assert(store.load(1L) == Seq(s1))
   }
+
+  test("the autoscaler's quota push rewrites both the message and the byte rate") {
+    val loop = new graft.control.ScalingLoop(new JobManager(spark),
+      new AutoScaler(AutoScaler.Config(calibrateMs = 0L)))
+    val capped = spec("quota__g").copy(flowControl = FlowControl(5.0, 100.0, 7.0))
+    val up = loop.updatedSpec(capped, loop.Decision("quota__g", 2.5, 3, 2.5 * AutoScaler.MessagesPerWorker))
+    assert(up.flowControl == FlowControl(2.5 * AutoScaler.MessagesPerWorker,
+      2.5 * AutoScaler.BytesPerWorker, 7.0))
+    // never below one worker's budget, for either rate
+    val low = loop.updatedSpec(capped, loop.Decision("quota__g", 0.1, 1, 0.1 * AutoScaler.MessagesPerWorker))
+    assert(low.flowControl == FlowControl(AutoScaler.MessagesPerWorker, AutoScaler.BytesPerWorker, 7.0))
+  }
 }

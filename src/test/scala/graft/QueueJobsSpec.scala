@@ -6,6 +6,8 @@ import graft.streaming.{ForwardingEngine, QueueJobs}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** REPLICATION / LOAD_GEN / AVAILABILITY job types (job.proto:339-356) over
   * the DSv2 queue connector — including the cross-cluster replication loop
   * guard and the streaming-write path. */
@@ -107,5 +109,34 @@ class QueueJobsSpec extends AnyFunSuite {
     val p99 = r.getAs[Long]("p99_ms")
     assert(p50 > 30000L && p50 < 40000L, s"p50=$p50")
     assert(p99 > p50 && r.getAs[Long]("max_ms") == 64000L)
+  }
+
+  test("a job's bytesPerSec caps every trigger's bytes on the live stream") {
+    GraftBroker.reset()
+    GraftBroker.createTopic("big-rec", 2)
+    // 24 records of 1,500 bytes (1,496-byte value + 4-byte key) over two partitions
+    (0 until 24).foreach(i => GraftBroker.produce("big-rec", Some(i % 2),
+      f"k$i%03d".getBytes, Array.fill[Byte](1496)(i.toByte)))
+    val spec = graft.model.JobSpec(
+      jobGroupId = "big-rec__g", cluster = "local", topic = "big-rec", consumerGroup = "g",
+      rpc = graft.model.RpcSpec("grpc://svc", "kafka.consumerproxy.g/big-rec"),
+      flowControl = graft.model.FlowControl(Double.MaxValue, 6000.0, Double.MaxValue))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val q = QueueJobs.liveStream(spark, spec, triggerSec = 1.0).writeStream
+      .option("checkpointLocation", ckpt("bytes"))
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[ForwardingEngine.KafkaRecord], _: Long) =>
+        val rows = b.collect()
+        if (rows.nonEmpty) batches.add((rows.length.toLong, rows.map(r => r.key.length + r.value.length.toLong).sum))
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      val seen = batches.asScala.toSeq
+      assert(seen.map(_._1).sum == 24L, s"every record read once: $seen")
+      // 6,000 bytes/s x the 1 s trigger window = 6,000 bytes per trigger
+      assert(seen.forall(_._2 <= 6000L), s"a trigger overshot the byte cap: $seen")
+      assert(seen.size >= 6, s"24 x 1,500 bytes needs at least 6 capped triggers: $seen")
+    } finally q.stop()
   }
 }
