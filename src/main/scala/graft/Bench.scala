@@ -545,10 +545,10 @@ object Bench {
     // msgs/s scale unit is defined against real gRPC I/O, so this is the
     // honest baseline comparison; the in-process forward rate above
     // isolates pure engine cost, and the two together give the wire cost.
-    // The protocol is the full RFC 9113 exchange (preface, HEADERS+DATA
-    // out, HEADERS/DATA/TRAILERS back, grpc-status from the trailers) —
-    // the reference's actual wire format minus TLS and HPACK dynamic
-    // tables. Measured as 5 reps with min and median reported — the same
+    // The protocol is gRPC's HTTP/2 exchange on Netty's codec (HEADERS+DATA
+    // out, HEADERS/DATA/TRAILERS back, grpc-status from the trailers, full
+    // HPACK and flow control) — the reference's actual wire format minus
+    // TLS. Measured as 5 reps with min and median reported — the same
     // rep structure as the stream legs, for the same reason: the r9
     // official wire figure swung −26% vs the local run on a single-shot
     // measurement while per-query times were flat; single TCP passes on a

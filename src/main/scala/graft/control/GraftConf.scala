@@ -35,9 +35,20 @@ import org.apache.spark.sql.SparkSession
  *    checkpoint, the offset- and commit-log writes every trigger makes fork
  *    no `chmod`/`readlink` (Hadoop without libhadoop); other file systems
  *    keep Spark's own manager.
+ *  - status-store retention of 20 jobs, stages and SQL executions
+ *    (`spark.ui.retainedJobs`, `spark.ui.retainedStages`,
+ *    `spark.sql.ui.retainedExecutions`; Spark keeps 1,000 of each): the
+ *    driver's status store lives even with the UI off, and a forwarding
+ *    query adds one job, stage and SQL execution every trigger, so the
+ *    default holds ~20 MB of live heap that nothing reads (`fwd_retry`:
+ *    ~195 MB live at 1,000, 175 MB at 20). 20 still shows the last few
+ *    triggers when the UI is on. Read when the SparkContext starts.
  */
 object GraftConf {
-  val Settings: Map[String, String] = Map(
+  private val StatusRetention: Map[String, String] = Seq("spark.ui.retainedJobs",
+    "spark.ui.retainedStages", "spark.sql.ui.retainedExecutions").map(_ -> "20").toMap
+
+  val Settings: Map[String, String] = StatusRetention ++ Map(
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -55,8 +66,9 @@ object GraftConf {
     Settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   /** The local-mode session: `local[cpus]` with the graft planner
-    * extensions, one shuffle partition per core and the production
-    * checkpoint file manager. Callers set their own log level. */
+    * extensions, one shuffle partition per core, the production
+    * checkpoint file manager and status-store retention. Callers set their
+    * own log level. */
   def local(cpus: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -70,5 +82,6 @@ object GraftConf {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config(LocalCheckpointFiles.ClassKey, Settings(LocalCheckpointFiles.ClassKey))
+    .config(StatusRetention)
     .getOrCreate()
 }

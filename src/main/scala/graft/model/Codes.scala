@@ -57,6 +57,16 @@ object GrpcStatus {
     ALREADY_EXISTS, PERMISSION_DENIED, RESOURCE_EXHAUSTED, FAILED_PRECONDITION,
     ABORTED, OUT_OF_RANGE, UNIMPLEMENTED, INTERNAL, UNAVAILABLE, DATA_LOSS,
     UNAUTHENTICATED)
+
+  /** The `grpc-status` number of a name: `all` is in canonical order
+    * (OK=0 … UNAUTHENTICATED=16); an unknown name is UNKNOWN (2). */
+  def code(name: String): Int = {
+    val i = all.indexOf(name)
+    if (i >= 0) i else 2
+  }
+
+  /** The name of a `grpc-status` number; out of range is UNKNOWN. */
+  def named(code: Int): String = if (code >= 0 && code < all.size) all(code) else UNKNOWN
 }
 
 /** The `kafka-action` response-trailer vocabulary a consumer may return to

@@ -6,7 +6,7 @@ import java.util.UUID
 import java.util.zip.CRC32
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileContext, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.internal.SQLConf
@@ -21,11 +21,17 @@ import org.apache.spark.sql.internal.SQLConf
  * trigger. Here the bytes stream into a `.<name>.<uuid>.tmp` sibling while
  * Hadoop's `.crc` sidecar is computed on the fly ("crc\0", the int
  * bytes-per-checksum, one big-endian CRC32 per chunk), so a verifying
- * `FileContext` read still checks it. Publishing is a hard link when
+ * read still checks it. Publishing is a hard link when
  * overwrite is not allowed — atomic no-clobber, a clash surfacing as
  * Hadoop's `FileAlreadyExistsException`, which the metadata logs turn into
  * Spark's concurrent-writer error — and an atomic rename when it is. No
  * fsync, as in the inherited code; the file mode comes from the umask.
+ * A local read verifies the `.crc`: the inherited `FileContext.open(path)`
+ * reaches the raw file system and checks nothing (Hadoop 3.4.2), so a
+ * flipped byte in `offsets/<n>` would be read back silently on restart.
+ * The read goes through the buffer-size overload, whose `ChecksumFs`
+ * raises `ChecksumException` and, unlike `LocalFileSystem.open`, neither
+ * moves the file to a `bad_files` directory nor forks `df` to find one.
  * Every other method, and every path on another file system, runs the
  * manager Spark picks when no class is named (the FileContext one, or the
  * FileSystem one for a scheme FileContext does not support).
@@ -49,6 +55,8 @@ class LocalCheckpointFiles(path: Path, hadoopConf: Configuration) extends Checkp
 
   private val bytesPerSum = hadoopConf.getInt("file.bytes-per-checksum", 512)
 
+  private lazy val verifying = FileContext.getLocalFSFileContext(hadoopConf)
+
   override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
     local match {
       case Some(fs) =>
@@ -59,7 +67,10 @@ class LocalCheckpointFiles(path: Path, hadoopConf: Configuration) extends Checkp
       case None => inherited.createAtomic(p, overwriteIfPossible)
     }
 
-  override def open(p: Path): FSDataInputStream = inherited.open(p)
+  override def open(p: Path): FSDataInputStream = local match {
+    case Some(_) => verifying.open(p, hadoopConf.getInt("io.file.buffer.size", 4096))
+    case None => inherited.open(p)
+  }
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = inherited.list(p, filter)
   override def mkdirs(p: Path): Unit = inherited.mkdirs(p)
   override def exists(p: Path): Boolean = inherited.exists(p)

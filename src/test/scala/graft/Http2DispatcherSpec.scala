@@ -16,11 +16,12 @@ object Http2World {
   def reset(): Unit = seen.clear()
 }
 
-/** The HTTP/2-framed dispatch path: the reference's wire contract — action
+/** The HTTP/2 dispatch path: the reference's wire contract — action
   * override and grpc-status arriving as TRAILERS
   * (GrpcDispatcher.java:362-404), kafka-* metadata as request headers,
   * deadline/unavailable precedence per Codes.codeFor — exercised over real
-  * TCP with real RFC 9113 frames. */
+  * TCP, against graft's own server and against a stock Netty peer
+  * ([[H2TestPeer]]). */
 class Http2DispatcherSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -147,8 +148,9 @@ class Http2DispatcherSpec extends AnyFunSuite {
       try {
         val rng = new scala.util.Random(7)
         for (i <- 0 until 40) {
-          // include payloads past MaxFrame to force DATA splitting, and
-          // header values past 127 bytes to force multi-byte HPACK ints
+          // include payloads past the 16 KiB default frame size to force
+          // DATA splitting, and header values past 127 bytes to force
+          // multi-byte HPACK ints
           val payload = new Array[Byte](if (i == 0) 0 else rng.nextInt(40000))
           rng.nextBytes(payload)
           val headers = (0 until rng.nextInt(5)).map(j =>
@@ -164,13 +166,13 @@ class Http2DispatcherSpec extends AnyFunSuite {
   }
 
   test("server close() unblocks pooled-idle serve threads (no lingering sockets)") {
-    // a pooled client connection sits idle between dispatches with its
-    // serve thread blocked in readFrame; close() must close tracked
-    // accepted sockets so those threads exit instead of lingering forever
+    // a pooled client connection sits idle between dispatches on one of the
+    // server's event-loop threads; close() must end those threads and the
+    // connections they serve instead of leaving them behind
     def serveThreads(): Set[Thread] = {
       val all = new Array[Thread](Thread.activeCount() + 16)
       Thread.enumerate(all)
-      all.filter(t => t != null && t.getName.startsWith("graft-h2-serve-")).toSet
+      all.filter(t => t != null && t.getName.startsWith("graft-h2-server-")).toSet
     }
     val before = serveThreads()
     val server = new Http2ConsumerServer(_ =>
@@ -179,16 +181,17 @@ class Http2DispatcherSpec extends AnyFunSuite {
     try {
       assert(d.dispatch(DispatchRequest("x".getBytes("UTF-8"), Map.empty))
         .statusCode == GrpcStatus.OK)
-      // connection now pooled-idle; its serve thread is parked in readFrame
+      // the connection is now pooled-idle on a server loop thread
       val during = serveThreads() -- before
-      assert(during.nonEmpty, "expected a live serve thread for the pooled connection")
+      assert(during.nonEmpty, "expected a live server thread for the pooled connection")
       server.close()
       val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (serveThreads().intersect(during).exists(_.isAlive) &&
+      while ((during.exists(_.isAlive) || d.channels.exists(_.isActive)) &&
         System.nanoTime() < deadline) Thread.sleep(20)
       assert(!during.exists(_.isAlive),
-        "serve threads still alive 5s after close(): " +
+        "server threads still alive 5s after close(): " +
           during.filter(_.isAlive).map(_.getName).mkString(", "))
+      assert(!d.channels.exists(_.isActive), "the client's connection outlived the server")
     } finally { d.close(); server.close() }
   }
 
@@ -199,7 +202,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
   }
 
   test("multiplexed dispatcher: 8 in-flight streams on ONE connection, responses correlated by stream id out of order") {
-    // A raw-frame HTTP/2 server that holds EIGHT complete requests on one
+    // A bare HTTP/2 peer that holds EIGHT complete requests on one
     // connection before answering, then replies in REVERSE stream-id
     // order, tagging each trailer's kafka-action with the REQUEST's
     // payload digest. Only true stream-id demultiplexing can hand every
@@ -207,43 +210,14 @@ class Http2DispatcherSpec extends AnyFunSuite {
     // stream 15's verdict. This is RFC 9113 concurrency (the reference's
     // 250-streams/channel shape) exercised for real.
     val n = 8
-    val server = new java.net.ServerSocket(0)
-    val t = new Thread(() => {
-      try {
-        val sock = server.accept()
-        sock.setTcpNoDelay(true)
-        val in = new java.io.DataInputStream(sock.getInputStream)
-        val out = new java.io.DataOutputStream(sock.getOutputStream)
-        val preface = new Array[Byte](Http2.Preface.length)
-        in.readFully(preface)
-        Http2.writeFrame(out, Http2.SETTINGS, 0, 0, Array.emptyByteArray)
-        out.flush()
-        val bodies = scala.collection.mutable.Map.empty[Int, java.io.ByteArrayOutputStream]
-        val done = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
-        while (done.size < n) {
-          val f = Http2.readFrame(in)
-          f.tpe match {
-            case Http2.DATA =>
-              bodies.getOrElseUpdate(f.streamId, new java.io.ByteArrayOutputStream())
-                .write(f.payload)
-              if ((f.flags & Http2.END_STREAM) != 0)
-                done += f.streamId -> Http2.grpcUnframe(bodies(f.streamId).toByteArray)
-            case _ => () // SETTINGS/HEADERS/PING — the test needs only bodies
-          }
-        }
-        done.sortBy(-_._1).foreach { case (sid, payload) => // REVERSED
-          Http2.writeFrame(out, Http2.HEADERS, Http2.END_HEADERS, sid,
-            Http2.encodeHeaders(Seq(":status" -> "200", "content-type" -> "application/grpc")))
-          Http2.writeData(out, sid, Http2.grpcFrame(Array.emptyByteArray), endStream = false)
-          Http2.writeFrame(out, Http2.HEADERS, Http2.END_HEADERS | Http2.END_STREAM, sid,
-            Http2.encodeHeaders(Seq("grpc-status" -> "0",
-              "kafka-action" -> digestOf(payload))))
-        }
-        out.flush()
-      } catch { case _: java.io.IOException => () }
+    val held = scala.collection.mutable.ArrayBuffer.empty[(H2TestPeer.Stream, Array[Byte])]
+    val peer = new H2TestPeer((s, payload) => { // on the peer's one loop thread
+      held += s -> payload
+      if (held.size == n) held.sortBy(-_._1.id).foreach { case (st, p) => // REVERSED
+        st.reply(0, Some(digestOf(p)))
+      }
     })
-    t.setDaemon(true); t.start()
-    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.getLocalPort,
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port,
       rpcTimeoutMs = 10000, connections = 1)
     try {
       val results = new java.util.concurrent.ConcurrentHashMap[Int, DispatchResult]()
@@ -263,7 +237,7 @@ class Http2DispatcherSpec extends AnyFunSuite {
         assert(r.action.contains(digestOf(s"payload-$i".getBytes("UTF-8"))),
           s"caller $i got someone else's response: $r")
       }
-    } finally { d.close(); server.close() }
+    } finally { d.close(); peer.close() }
   }
 
   test("multiplexed dispatcher: an expired stream is abandoned without poisoning its connection") {
@@ -336,60 +310,33 @@ class Http2DispatcherSpec extends AnyFunSuite {
   }
 
   test("multiplexed dispatcher: per-connection in-flight streams capped at 250 (reference's channel shape)") {
-    // A raw-frame server that ANSWERS NOTHING until the client stops
-    // sending: with 260 concurrent callers on one connection, a compliant
-    // client must stop opening streams at SETTINGS_MAX_CONCURRENT_STREAMS-
-    // scale (we cap at the reference's 250/channel); the 10 over-cap
-    // callers block on the permit and proceed only as responses free
-    // streams. Without the cap the server would see all 260 END_STREAMs
-    // before any reply.
+    // A bare HTTP/2 peer that advertises no stream limit and ANSWERS
+    // NOTHING until the client stops sending: with 260 concurrent callers
+    // on one connection, the client must stop opening streams at the
+    // reference's 250/channel; the 10 over-cap callers wait and proceed
+    // only as responses free streams. Without the cap the peer would see
+    // all 260 requests before any reply.
     val n = MultiplexedHttp2Dispatcher.MaxConcurrentStreams + 10
-    val server = new java.net.ServerSocket(0)
     @volatile var seenBeforeReplies = -1
-    val t = new Thread(() => {
-      try {
-        val sock = server.accept()
-        sock.setTcpNoDelay(true)
-        val in = new java.io.DataInputStream(sock.getInputStream)
-        val out = new java.io.DataOutputStream(sock.getOutputStream)
-        val preface = new Array[Byte](Http2.Preface.length)
-        in.readFully(preface)
-        Http2.writeFrame(out, Http2.SETTINGS, 0, 0, Array.emptyByteArray)
-        out.flush()
-        val open = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def answer(sid: Int): Unit = {
-          Http2.writeFrame(out, Http2.HEADERS, Http2.END_HEADERS, sid,
-            Http2.encodeHeaders(Seq(":status" -> "200", "content-type" -> "application/grpc")))
-          Http2.writeData(out, sid, Http2.grpcFrame(Array.emptyByteArray), endStream = false)
-          Http2.writeFrame(out, Http2.HEADERS, Http2.END_HEADERS | Http2.END_STREAM, sid,
-            Http2.encodeHeaders(Seq("grpc-status" -> "0")))
-          out.flush()
-        }
-        var quiet = false
-        var answered = 0
-        while (answered < n) {
-          val f =
-            try { sock.setSoTimeout(if (quiet) 10000 else 700); Some(Http2.readFrame(in)) }
-            catch { case _: java.net.SocketTimeoutException => None }
-          f match {
-            case Some(fr) if fr.tpe == Http2.DATA && (fr.flags & Http2.END_STREAM) != 0 =>
-              if (quiet) { answer(fr.streamId); answered += 1 }
-              else open += fr.streamId
-            case Some(_) => ()
-            case None => // the client has stopped opening streams: record and drain
-              if (!quiet) {
-                seenBeforeReplies = open.size
-                quiet = true
-                open.foreach(answer)
-                answered += open.size
-                open.clear()
-              }
-          }
-        }
-      } catch { case _: java.io.IOException => () }
-    })
-    t.setDaemon(true); t.start()
-    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.getLocalPort,
+    // peer state below is touched only on the peer's one loop thread
+    val held = scala.collection.mutable.ArrayBuffer.empty[H2TestPeer.Stream]
+    var quiet = false
+    var lull: io.netty.util.concurrent.ScheduledFuture[_] = null
+    val peer = new H2TestPeer((s, _) =>
+      if (quiet) s.reply(0)
+      else {
+        held += s
+        if (lull != null) lull.cancel(false)
+        // the client has stopped opening streams once 700 ms pass with no
+        // new request: record, then answer everything
+        lull = s.loop.schedule((() => {
+          seenBeforeReplies = held.size
+          quiet = true
+          held.foreach(_.reply(0))
+          held.clear()
+        }): Runnable, 700, java.util.concurrent.TimeUnit.MILLISECONDS)
+      })
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port,
       rpcTimeoutMs = 30000, connections = 1)
     try {
       val results = new java.util.concurrent.ConcurrentHashMap[Int, DispatchResult]()
@@ -402,37 +349,141 @@ class Http2DispatcherSpec extends AnyFunSuite {
       ts.foreach(_.join(60000))
       assert(results.size == n, s"only ${results.size}/$n callers completed")
       assert(seenBeforeReplies == MultiplexedHttp2Dispatcher.MaxConcurrentStreams,
-        s"server saw $seenBeforeReplies unanswered streams — the in-flight cap " +
+        s"peer saw $seenBeforeReplies unanswered streams — the in-flight cap " +
           s"(${MultiplexedHttp2Dispatcher.MaxConcurrentStreams}) did not hold")
       (0 until n).foreach(i =>
         assert(results.get(i).statusCode == GrpcStatus.OK, s"caller $i: ${results.get(i)}"))
-    } finally { d.close(); server.close() }
+    } finally { d.close(); peer.close() }
+  }
+
+  test("multiplexed dispatcher: a peer's lower SETTINGS_MAX_CONCURRENT_STREAMS holds, calls past it wait") {
+    // The peer advertises 8 streams and answers each request 5 ms late;
+    // after a warm-up call has carried the SETTINGS both ways, 40 callers
+    // share the connection. Calls past the limit must wait for a stream
+    // to close, not fail, and the peer must never run more than 8.
+    val limit = 8
+    var inFlight = 0 // peer loop only
+    @volatile var maxInFlight = 0
+    val peer = new H2TestPeer((s, _) => {
+      inFlight += 1
+      maxInFlight = math.max(maxInFlight, inFlight)
+      s.loop.schedule((() => { inFlight -= 1; s.reply(0) }): Runnable,
+        5, java.util.concurrent.TimeUnit.MILLISECONDS)
+      ()
+    }, maxStreams = Some(limit.toLong))
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port, rpcTimeoutMs = 30000, connections = 1)
+    try {
+      assert(d.dispatch(DispatchRequest("warm".getBytes("UTF-8"), Map.empty)).statusCode == GrpcStatus.OK)
+      val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val ts = (0 until 40).map { t =>
+        val th = new Thread(() => (0 until 5).foreach { i =>
+          val r = d.dispatch(DispatchRequest(s"t$t-$i".getBytes("UTF-8"), Map.empty))
+          if (r.statusCode != GrpcStatus.OK) bad.add(s"t$t-$i: $r")
+        })
+        th.start(); th
+      }
+      ts.foreach(_.join(60000))
+      assert(bad.isEmpty, bad.toArray.take(5).mkString("; "))
+      assert(maxInFlight <= limit, s"peer ran $maxInFlight requests at once, over its limit of $limit")
+      assert(peer.connections.get() == 1, s"dialed ${peer.connections.get()} connections")
+    } finally { d.close(); peer.close() }
+  }
+
+  test("a stream the peer refuses with REFUSED_STREAM is sent again on its connection") {
+    // The peer refuses the first request it sees, unrun, as an HTTP/2
+    // server over its stream limit does, and answers the rest.
+    @volatile var requests = 0
+    val peer = new H2TestPeer((s, _) => {
+      requests += 1
+      if (requests == 1) s.refuse() else s.reply(0, Some(KafkaAction.Skip))
+    })
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port, rpcTimeoutMs = 5000, connections = 1)
+    try {
+      val r = d.dispatch(DispatchRequest("once".getBytes("UTF-8"), Map.empty))
+      assert(r == DispatchResult(GrpcStatus.OK, Some(KafkaAction.Skip), overdue = false), r.toString)
+      assert(requests == 2 && peer.connections.get() == 1,
+        s"peer saw $requests requests on ${peer.connections.get()} connections")
+    } finally { d.close(); peer.close() }
+  }
+
+  test("GOAWAY: calls the peer will not run go out on one new connection; the old one drains and closes") {
+    // The peer allows 2 streams; on its first connection it holds the
+    // first two requests after the warm-up, and 200 ms later, with the
+    // other callers queued behind them, sends GOAWAY naming the later one
+    // as its last; it answers both 100 ms after that. The queued callers
+    // must be sent on a second connection, and the client must close the
+    // first once its two streams are done.
+    val held = scala.collection.mutable.ArrayBuffer.empty[H2TestPeer.Stream] // peer loop only
+    @volatile var firstConnRequests = 0
+    val peer = new H2TestPeer((s, payload) =>
+      if (s.conn > 1) s.reply(0)
+      else {
+        firstConnRequests += 1
+        if (new String(payload, "UTF-8") == "warm") s.reply(0)
+        else {
+          held += s
+          if (held.size == 2) {
+            s.loop.schedule((() => {
+              s.goAway()
+              s.loop.schedule((() => held.foreach(_.reply(0))): Runnable,
+                100, java.util.concurrent.TimeUnit.MILLISECONDS)
+              ()
+            }): Runnable, 200, java.util.concurrent.TimeUnit.MILLISECONDS)
+            ()
+          }
+        }
+      }, maxStreams = Some(2L))
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port, rpcTimeoutMs = 10000, connections = 1)
+    try {
+      assert(d.dispatch(DispatchRequest("warm".getBytes("UTF-8"), Map.empty)).statusCode == GrpcStatus.OK)
+      val results = new java.util.concurrent.ConcurrentHashMap[Int, DispatchResult]()
+      val ts = (0 until 6).map { i =>
+        val th = new Thread(() => {
+          results.put(i, d.dispatch(DispatchRequest(s"p$i".getBytes("UTF-8"), Map.empty))); ()
+        })
+        th.start(); th
+      }
+      ts.foreach(_.join(30000))
+      (0 until 6).foreach(i => assert(results.get(i) != null && results.get(i).statusCode == GrpcStatus.OK,
+        s"caller $i: ${results.get(i)}"))
+      assert(firstConnRequests == 3, s"the first connection ran $firstConnRequests requests, not warm-up + 2")
+      assert(peer.connections.get() == 2, s"expected one replacement dial, saw ${peer.connections.get()}")
+      val until = System.nanoTime() + 5000000000L
+      while (peer.closedConnections.get() < 1 && System.nanoTime() < until) Thread.sleep(10)
+      assert(peer.closedConnections.get() == 1, "the client never closed the connection that sent GOAWAY")
+    } finally { d.close(); peer.close() }
   }
 
   test("stream-space exhaustion retires gracefully: the boundary request itself succeeds") {
-    // the r14-advisory race: `retiring` was set BEFORE the request entered
-    // `pending`, so on the exhaustion boundary the reader could observe
-    // retiring && pending.isEmpty, exit, and poison the socket before the
-    // boundary request's frames were written — spuriously failing exactly
-    // the request the graceful-retirement comment promises keeps serving.
-    // The firstStreamId seam starts one step from the 31-bit boundary.
+    // The request that takes the last client stream id (2^31-1) must
+    // still be answered on its connection, and the next dispatch must dial
+    // exactly one replacement. The codec's local endpoint is moved to one
+    // step before the boundary by opening (and closing) a stream there.
     val server = new Http2ConsumerServer(req =>
       DispatchResult(GrpcStatus.OK, Some(digestOf(req.payload)), overdue = false))
     try {
       val d = new MultiplexedHttp2Dispatcher("127.0.0.1", server.port,
-        rpcTimeoutMs = 5000, connections = 1,
-        firstStreamId = Int.MaxValue - 2) // the NEXT take exhausts the space
+        rpcTimeoutMs = 5000, connections = 1)
       try {
+        val warm = "warm".getBytes("UTF-8")
+        assert(d.dispatch(DispatchRequest(warm, Map.empty)).action.contains(digestOf(warm)))
+        val ch = d.channels.head
+        val codec = ch.pipeline().get(classOf[io.netty.handler.codec.http2.Http2ConnectionHandler])
+        ch.eventLoop().submit((() => {
+          codec.connection().local().createStream(Int.MaxValue - 2, true).close(); ()
+        }): Runnable).get()
         val p1 = "boundary".getBytes("UTF-8")
         val r1 = d.dispatch(DispatchRequest(p1, Map.empty))
         assert(r1.statusCode == GrpcStatus.OK && r1.action.contains(digestOf(p1)),
           s"the stream-space boundary request failed: $r1")
+        assert(codec.connection().local().lastStreamCreated() == Int.MaxValue,
+          "the boundary request did not take the last stream id")
         // the retired connection is replaced for the next dispatch
         val p2 = "after-retire".getBytes("UTF-8")
         val r2 = d.dispatch(DispatchRequest(p2, Map.empty))
         assert(r2.statusCode == GrpcStatus.OK && r2.action.contains(digestOf(p2)), r2.toString)
         assert(server.acceptedConnections.get() == 2,
-          s"expected a replacement dial after retirement, saw " +
+          s"expected one replacement dial after retirement, saw " +
             s"${server.acceptedConnections.get()} connections")
       } finally d.close()
     } finally server.close()
@@ -459,30 +510,39 @@ class Http2DispatcherSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("frame layer emits legal HTTP/2 bytes: preface, 9-byte headers, HPACK decode parity") {
-    // codec-level round trip without sockets: encode → decode across the
-    // representative surface (pseudo-headers first, long values, empties)
-    val hs = Seq(":method" -> "POST", ":path" -> "/kafka.consumerproxy.Consumer/Dispatch",
-      "content-type" -> "application/grpc", "kafka-topic" -> "t",
-      "long" -> ("x" * 5000), "empty" -> "")
-    assert(Http2.decodeHeaders(Http2.encodeHeaders(hs)) == hs)
-    // gRPC message framing round trip
-    val msg = Array.tabulate[Byte](1000)(i => (i % 251).toByte)
-    assert(Http2.grpcUnframe(Http2.grpcFrame(msg)).toSeq == msg.toSeq)
-    // status code table is the canonical numbering both directions
-    assert(Http2.statusToCode(GrpcStatus.OK) == 0)
-    assert(Http2.statusToCode(GrpcStatus.DEADLINE_EXCEEDED) == 4)
-    assert(Http2.statusToCode(GrpcStatus.UNAVAILABLE) == 14)
-    assert(Http2.codeToStatus(4) == GrpcStatus.DEADLINE_EXCEEDED)
-    // frame header layout: length/type/flags/stream id as RFC 9113 §4.1
-    val bo = new java.io.ByteArrayOutputStream()
-    Http2.writeFrame(new java.io.DataOutputStream(bo), Http2.HEADERS,
-      Http2.END_HEADERS | Http2.END_STREAM, 7, Array[Byte](1, 2, 3))
-    val b = bo.toByteArray
-    assert(b.length == 9 + 3)
-    assert((b(0), b(1), b(2)) == (0.toByte, 0.toByte, 3.toByte)) // 24-bit length
-    assert(b(3) == Http2.HEADERS.toByte)
-    assert(b(4) == (Http2.END_HEADERS | Http2.END_STREAM).toByte)
-    assert(java.nio.ByteBuffer.wrap(b, 5, 4).getInt == 7) // R bit clear
+  test("grpc-status travels as its canonical code number, both ways") {
+    assert(GrpcStatus.code(GrpcStatus.OK) == 0)
+    assert(GrpcStatus.code(GrpcStatus.DEADLINE_EXCEEDED) == 4)
+    assert(GrpcStatus.code(GrpcStatus.UNAVAILABLE) == 14)
+    assert(GrpcStatus.code("NOT_A_STATUS") == 2)
+    assert(GrpcStatus.named(4) == GrpcStatus.DEADLINE_EXCEEDED)
+    assert(GrpcStatus.named(99) == GrpcStatus.UNKNOWN)
+    assert(GrpcStatus.all.indices.forall(i => GrpcStatus.code(GrpcStatus.named(i)) == i))
+  }
+
+  test("interop: every verdict from a stock Netty HTTP/2 peer decodes, incl. Huffman, indexed fields and a 100 KiB reply") {
+    // The peer's encoder uses Huffman strings and indexes repeated fields
+    // in its dynamic table, so from the second reply on the response
+    // headers and trailers arrive as table references. The "big" reply's
+    // gRPC body exceeds the 64 KiB default windows: it arrives only if the
+    // client returns WINDOW_UPDATEs as it reads.
+    val big = Array.tabulate[Byte](100 * 1024)(i => (i % 251).toByte)
+    val verdicts = Map(
+      "ok" -> (0, None), "retry" -> (0, Some(KafkaAction.Retry)),
+      "skip" -> (3, Some(KafkaAction.Skip)), "stash" -> (5, Some(KafkaAction.Stash)),
+      "late" -> (4, None), "gone" -> (14, None), "big" -> (0, Some(KafkaAction.Retry)))
+    val peer = new H2TestPeer((s, payload) => {
+      val p = new String(payload, "UTF-8")
+      val (status, action) = verdicts(p)
+      s.reply(status, action, if (p == "big") big else Array.emptyByteArray)
+    })
+    val d = new MultiplexedHttp2Dispatcher("127.0.0.1", peer.port, rpcTimeoutMs = 5000, connections = 1)
+    try {
+      for (round <- 1 to 3; (p, (status, action)) <- verdicts.toSeq.sortBy(_._1)) {
+        val r = d.dispatch(DispatchRequest(p.getBytes("UTF-8"), Map("kafka-offset" -> s"$round")))
+        assert(r == DispatchResult(GrpcStatus.named(status), action, overdue = false),
+          s"round $round, $p: $r")
+      }
+    } finally { d.close(); peer.close() }
   }
 }

@@ -217,6 +217,30 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[ChecksumException](readVerified(offsets))
   }
 
+  test("a flipped byte in a stopped query's offset log fails the manager's read with ChecksumException") {
+    GraftBroker.reset(); TestConsumer.reset()
+    TestConsumer.behaviors += "lcf-flip" -> (_ => DispatchResult("OK", None, overdue = false))
+    val topic = "lcf-flip-topic"
+    GraftBroker.createTopic(topic, 1)
+    val ckpt = tempDir("flip")
+    produce(topic, 0 until 10, "f")
+    val q = forward(jobSpec(topic, "lcf-flip-group"), "lcf-flip", ckpt, "lcf-flip")
+    q.processAllAvailable(); val last = lastBatch(q); q.stop()
+    val offsets = ckpt.resolve("offsets").resolve(last.toString)
+    val fm = CheckpointFileManager.create(new Path(ckpt.resolve("offsets").toUri), hadoopConf(spark))
+    assert(fm.isInstanceOf[LocalCheckpointFiles])
+    def readBack(): Array[Byte] = {
+      val in = fm.open(new Path(offsets.toUri))
+      try in.readAllBytes() finally in.close()
+    }
+    assert(readBack().sameElements(Files.readAllBytes(offsets)))
+    val b = Files.readAllBytes(offsets)
+    b(b.length / 2) = (b(b.length / 2) ^ 0x01).toByte
+    Files.write(offsets, b)
+    intercept[ChecksumException](readBack())
+    assert(Files.exists(offsets), "the corrupt file must stay where it is")
+  }
+
   test("RocksDB state checkpoints through the manager and is restored on restart") {
     val sess = spark
     import sess.implicits._

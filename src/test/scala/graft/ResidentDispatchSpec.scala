@@ -52,20 +52,22 @@ class ResidentDispatchSpec extends AnyFunSuite {
     all.take(n).filter(t => t != null && t.isAlive && t.getName.startsWith(prefix)).toSeq
   }
 
-  /** Reader threads of connections that died a moment ago take one read
-    * timeout to notice; wait that out before counting. */
-  private def settledReaders(port: Int, atMost: Int): Int = {
+  /** The executor's one group of HTTP/2 client event loops, whatever the
+    * number of dispatchers, connections and batches. */
+  private val clientLoops = Http2.LoopThreads
+
+  /** Waits up to 5 s for `done`, for a channel close still in flight. */
+  private def eventually(done: => Boolean): Boolean = {
     val deadline = System.nanoTime() + 5000000000L
-    while (liveThreads(s"graft-h2mux-read-$port").size > atMost &&
-      System.nanoTime() < deadline) Thread.sleep(20)
-    liveThreads(s"graft-h2mux-read-$port").size
+    while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+    done
   }
 
   private def assertBounded(server: Http2ConsumerServer): Unit = {
     assert(server.acceptedConnections.get() <= 2,
       s"dialed ${server.acceptedConnections.get()} connections for a 2-connection factory")
-    val readers = settledReaders(server.port, 2)
-    assert(readers <= 2, s"$readers live HTTP/2 reader threads for a 2-connection factory")
+    val loops = liveThreads("graft-h2-client-").size
+    assert(loops <= clientLoops, s"$loops live HTTP/2 client threads, bound $clientLoops")
     val pool = liveThreads("graft-dispatch-").size
     assert(pool <= 4 * poolSize, s"$pool shared dispatch threads, bound ${4 * poolSize}")
   }
@@ -139,6 +141,7 @@ class ResidentDispatchSpec extends AnyFunSuite {
       ok(d1)
       val dialed = server.acceptedConnections.get() // one per round-robin slot used
       assert(dialed == 2)
+      val d1Channels = d1.asInstanceOf[MultiplexedHttp2Dispatcher].channels
 
       now += DispatcherRegistry.IdleNs + 1
       val d2 = registry.borrow(f, sec)
@@ -146,8 +149,9 @@ class ResidentDispatchSpec extends AnyFunSuite {
         assert(!(d2 eq d1), "an idle entry outlived the window")
         ok(d2)
         assert(server.acceptedConnections.get() == dialed + 1, "the new dispatcher did not dial")
-        assert(settledReaders(server.port, 1) == 1,
-          "the evicted dispatcher's connection is still open")
+        assert(d1Channels.size == 2 && eventually(!d1Channels.exists(_.isOpen)),
+          "the evicted dispatcher's connections are still open")
+        assert(d2.asInstanceOf[MultiplexedHttp2Dispatcher].channels.count(_.isActive) == 1)
       } finally registry.giveBack(f, sec)
     } finally server.close()
   }

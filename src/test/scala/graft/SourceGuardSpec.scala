@@ -6,12 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source-tree guards that keep four consolidations from being undone:
+/** Source-tree guards that keep five consolidations from being undone:
   * every local Spark session comes from `GraftConf.local`, the engine's
   * `AckTrackingQueue` is the one ack state machine and the streaming
   * operators no job starts stay gone, no keyed state returns to the
-  * `*GroupsWithState` APIs, and HTTP/2 is the one network dispatch
-  * protocol. Runs from the project root. */
+  * `*GroupsWithState` APIs, HTTP/2 is the one network dispatch protocol,
+  * and Netty's codec is its one implementation. Runs from the project
+  * root. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def files(root: String): Seq[Path] = {
@@ -72,5 +73,20 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "MultiplexedHttp2Dispatcher with Http2ConsumerServer is the one network dispatch " +
         s"path: ${offenders.mkString(", ")}")
+  }
+
+  test("the hand-rolled HTTP/2 frame layer, HPACK subset and reader threads are named nowhere under src/") {
+    // assembled, so this file does not name them either
+    val retired = Seq("read" + "Frame", "write" + "Frame", "Pre" + "face", "grpc" + "Frame",
+      "grpc" + "Unframe", "encode" + "Headers", "decode" + "Headers", "Hpack" + "Int",
+      "graft-h2mux" + "-read", "graft-h2" + "-serve-", "firstStream" + "Id")
+    val all = files("src")
+    val offenders = for {
+      name <- retired
+      p <- containing(all, name)
+    } yield s"$name in $p"
+    assert(offenders.isEmpty,
+      "Netty's netty-codec-http2 does the framing, HPACK and flow control for " +
+        s"MultiplexedHttp2Dispatcher and Http2ConsumerServer: ${offenders.mkString(", ")}")
   }
 }
